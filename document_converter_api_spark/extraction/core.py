@@ -30,6 +30,16 @@ class ExtractResult:
     error: str | None
 
 
+# Error tags for documents the extractor knowingly leaves without text:
+# image-only PDFs this sandbox cannot OCR (the reference tesseracts them),
+# files whose password cannot be derived, and documents that blew the
+# per-doc wall-clock budget. The live metrics (operators/metrics.py) and
+# the lineage aggregate (plans/pipeline.partition_metrics) count each class
+# separately; a class added here is counted in both.
+NEEDS_OCR, ENCRYPTED, TIMEOUT = "needs_ocr", "encrypted", "timeout"
+COUNTED_ERRORS = (NEEDS_OCR, ENCRYPTED, TIMEOUT)
+
+
 # HTML5 §8.2.2.2 pre-scan: the charset declaration must appear in the
 # first 1024 bytes to be honored, and only INSIDE a <meta> tag — a bare
 # context-free 'charset=' match would honor charset tokens in urls,
@@ -101,14 +111,14 @@ def extract_document(payload: bytes, url: str = "",
     except DocTimeBudgetError:
         # wall-clock budget blown mid-parse (tagged like needs_ocr/
         # encrypted: stable code, filterable, counted in metrics)
-        return ExtractResult(None, "timeout")
+        return ExtractResult(None, TIMEOUT)
     except PdfNeedsOcrError:
         # detected-and-tagged reject (stable code, filterable downstream) —
         # the reference OCRs these via tesseract, unavailable in-sandbox
-        return ExtractResult(None, "needs_ocr")
+        return ExtractResult(None, NEEDS_OCR)
     except PdfEncryptedError:
         # the reference decrypts via qpdf; we tag instead of garbling
-        return ExtractResult(None, "encrypted")
+        return ExtractResult(None, ENCRYPTED)
     except Exception as exc:  # noqa: BLE001 — doc failure must not kill the job
         return ExtractResult(None, f"{type(exc).__name__}: {exc}"[:500])
     finally:

@@ -17,6 +17,10 @@ Scale design (100 TB / 10^12 docs):
 * Arrow batches are re-sliced to ``max_batch_bytes`` because HTML payloads
   are 10–100 KB — a default 10k-row batch would be multi-GB
   (spark.sql.execution.arrow.maxRecordsPerBatch alone is not size-aware);
+* the per-row Python loop computes only ``markdown``, ``error`` and
+  ``parse_ms``: ``url``/``lang``/``content_type``/``partition_id`` are
+  yielded as the input Arrow arrays (zero copy), and ``bytes_in``/
+  ``bytes_out`` are ``binary_length`` kernels over ``html``/``markdown``;
 * per-doc failures are captured in the ``error`` column, never raised
   (app/main.py:438-441 semantics).
 """
@@ -27,15 +31,10 @@ import time
 from collections.abc import Iterator
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..extraction.core import extract_document
 from ..functions.expressions import (
@@ -54,21 +53,8 @@ from ..functions.expressions import (
 # pathological page pins an executor core until the job is killed.
 DOC_TIME_BUDGET_S = 300.0
 
-# Output schema of the extraction stage.
-EXTRACT_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("lang", StringType()),
-        StructField("content_type", StringType()),
-        StructField("markdown", StringType()),
-        StructField("error", StringType()),
-        StructField("bytes_in", LongType()),
-        StructField("bytes_out", LongType()),
-        StructField("parse_ms", LongType()),
-        StructField("partition_id", IntegerType()),
-    ]
-)
-
+# Output schema of the extraction stage, declared once; the Spark schema is
+# derived from it. ``markdown`` is large_string end to end.
 _ARROW_OUT_SCHEMA = pa.schema(
     [
         ("url", pa.string()),
@@ -82,6 +68,7 @@ _ARROW_OUT_SCHEMA = pa.schema(
         ("partition_id", pa.int32()),
     ]
 )
+EXTRACT_SCHEMA = from_arrow_schema(_ARROW_OUT_SCHEMA)
 
 SUPPORTED_TYPES = ("html", "pdf", "docx")
 
@@ -104,48 +91,48 @@ def _slice_batches(batches: Iterator[pa.RecordBatch],
             yield batch.slice(start, rows_per)
 
 
+def _byte_length(values: pa.Array) -> pa.Array:
+    """Per-row payload size in bytes (UTF-8 bytes for strings), 0 for null."""
+    return pc.fill_null(pc.binary_length(values), 0).cast(pa.int64())
+
+
 def extract_arrow_batches(batches: Iterator[pa.RecordBatch],
                           max_batch_bytes: int = 64 * 1024 * 1024,
                           doc_time_budget_s: float | None = DOC_TIME_BUDGET_S
                           ) -> Iterator[pa.RecordBatch]:
     """U1–U5 over Arrow batches. Input columns: url, html, lang,
     content_type, partition_id. Rows iterate only *inside* the batch (the
-    standard Arrow-UDF pattern, SURVEY.md §1.4)."""
+    standard Arrow-UDF pattern, SURVEY.md §1.4), and only for what the
+    parser alone can compute: ``markdown``, ``error`` and ``parse_ms``.
+    The other input columns pass through as the same Arrow arrays, and the
+    byte counts are Arrow kernels over ``html`` and ``markdown``."""
     for batch in _slice_batches(batches, max_batch_bytes):
-        cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-        urls = cols["url"].to_pylist()
-        payloads = cols["html"].to_pylist()
-        langs = cols["lang"].to_pylist()
-        ctypes = cols["content_type"].to_pylist()
-        pids = cols["partition_id"].to_pylist()
-
+        html = batch.column("html")
         md_out: list[str | None] = []
         err_out: list[str | None] = []
-        b_in: list[int] = []
-        b_out: list[int] = []
         ms_out: list[int] = []
-        for payload, url, ctype in zip(payloads, urls, ctypes):
+        for payload, url, ctype in zip(html.to_pylist(),
+                                       batch.column("url").to_pylist(),
+                                       batch.column("content_type").to_pylist()):
             t0 = time.perf_counter()
             res = extract_document(payload or b"", url or "", ctype,
                                    time_budget_s=doc_time_budget_s)
             ms_out.append(int((time.perf_counter() - t0) * 1000))
             md_out.append(res.markdown)
             err_out.append(res.error)
-            b_in.append(len(payload) if payload is not None else 0)
-            b_out.append(len(res.markdown.encode("utf-8"))
-                         if res.markdown is not None else 0)
 
+        markdown = pa.array(md_out, pa.large_string())
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array(urls, pa.string()),
-                pa.array(langs, pa.string()),
-                pa.array(ctypes, pa.string()),
-                pa.array(md_out, pa.large_string()),
+                batch.column("url"),
+                batch.column("lang"),
+                batch.column("content_type"),
+                markdown,
                 pa.array(err_out, pa.string()),
-                pa.array(b_in, pa.int64()),
-                pa.array(b_out, pa.int64()),
+                _byte_length(html),
+                _byte_length(markdown),
                 pa.array(ms_out, pa.int64()),
-                pa.array(pids, pa.int32()),
+                batch.column("partition_id"),
             ],
             schema=_ARROW_OUT_SCHEMA,
         )
@@ -209,43 +196,33 @@ def prepare_pages(pages: DataFrame,
 def run_extract(valid: DataFrame,
                 shuffle_partitions: int | None = None,
                 max_batch_bytes: int = 64 * 1024 * 1024,
-                pre_shuffle: bool = True,
                 metrics=None,
                 doc_time_budget_s: float | None = DOC_TIME_BUDGET_S
                 ) -> DataFrame:
-    """Run the Arrow stage, optionally behind a salted repartition.
+    """Run the Arrow stage behind a salted repartition.
 
-    ``pre_shuffle=True`` (default) hash-exchanges on (xxhash64(url), salt) —
-    required when downstream commits by partition_id granule (resume
-    pipeline), and measured FASTER even on a balanced corpus (the exchange
-    decouples the scan from the Python stage and evens per-task doc counts;
-    skipping it fused scan+UDF into fewer, skewed tasks and lost ~40%).
-    ``pre_shuffle=False`` exists for pipelines that already partitioned
-    upstream (e.g. bucketed Iceberg writes) where a second exchange would be
-    pure waste."""
+    The hash exchange on (xxhash64(url), salt) is required when downstream
+    commits by partition_id granule (resume pipeline), and measured FASTER
+    even on a balanced corpus: it decouples the scan from the Python stage
+    and evens per-task doc counts (fusing scan+UDF into fewer, skewed tasks
+    lost ~40%)."""
     spark = valid.sparkSession
     n = shuffle_partitions or spark.sparkContext.defaultParallelism * 4
-    distributed = (valid.repartition(n, F.xxhash64("url"), F.col("salt"))
-                   if pre_shuffle else valid)
     fn = lambda it: extract_arrow_batches(  # noqa: E731
         it, max_batch_bytes, doc_time_budget_s)
     if metrics is not None:
         # accumulator-backed live throughput + per-task skew channel
         # (operators/metrics.ExtractionMetrics, north-rule requirement)
         fn = metrics.wrap(fn)
-    return distributed.drop("salt").mapInArrow(fn, schema=EXTRACT_SCHEMA)
+    return (valid.repartition(n, F.xxhash64("url"), F.col("salt"))
+            .drop("salt").mapInArrow(fn, schema=EXTRACT_SCHEMA))
 
 
 def extract_pipeline(pages: DataFrame,
                      max_bytes: int = MAX_FILE_SIZE,
                      num_partitions: int | None = None,
                      shuffle_partitions: int | None = None,
-                     pre_shuffle: bool = True,
-                     metrics=None,
-                     doc_time_budget_s: float | None = DOC_TIME_BUDGET_S
-                     ) -> tuple[DataFrame, DataFrame]:
+                     metrics=None) -> tuple[DataFrame, DataFrame]:
     """(results, rejects) — the composed S2/S3/P5 → repartition → U1–U5 flow."""
     valid, rejects = prepare_pages(pages, max_bytes, num_partitions)
-    return (run_extract(valid, shuffle_partitions, pre_shuffle=pre_shuffle,
-                        metrics=metrics, doc_time_budget_s=doc_time_budget_s),
-            rejects)
+    return run_extract(valid, shuffle_partitions, metrics=metrics), rejects

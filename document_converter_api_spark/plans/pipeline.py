@@ -21,13 +21,14 @@ table P/K times.
 
 from __future__ import annotations
 
-import argparse
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
+from ..extraction.core import COUNTED_ERRORS
 from ..functions.expressions import (
     MAX_FILE_SIZE,
     chunks_if_large_expr,
@@ -90,26 +91,22 @@ def partition_metrics(results: DataFrame) -> DataFrame:
     """A6 per-partition lineage aggregates (SURVEY.md §2.4): single hash
     aggregate, map-side partials free from Catalyst.
 
-    ``needs_ocr_count``/``encrypted_count``/``timeout_count`` break out
-    the DEGRADED error classes (round-3 verdict item 10; timeout added
-    round 5): image-only PDFs the sandbox cannot OCR, files whose
-    password the handler cannot derive, and documents that blew the
-    per-doc wall-clock budget (operators/extract.DOC_TIME_BUDGET_S). At
-    100 TB these columns are how an operator quantifies the text the
-    run *knowingly* left behind (the reference recovers the former via
-    tesseract) — without them the degradation hides inside the flat
-    ``failure_count``."""
+    Besides the flat ``failure_count``, one ``<class>_count`` column per
+    degraded error class of ``extraction/core.COUNTED_ERRORS`` (today
+    ``needs_ocr_count``, ``encrypted_count``, ``timeout_count``): image-only
+    PDFs the sandbox cannot OCR, files whose password the handler cannot
+    derive, and documents that blew the per-doc wall-clock budget
+    (operators/extract.DOC_TIME_BUDGET_S). At 100 TB these columns are how
+    an operator quantifies the text the run *knowingly* left behind (the
+    reference recovers the first via tesseract). Every column lands in the
+    partition's lineage row (:func:`run_extraction_job`)."""
     return results.groupBy("partition_id").agg(
         F.count("*").alias("doc_count"),
         F.sum("bytes_in").alias("bytes_in"),
         F.sum("bytes_out").alias("bytes_out"),
-        F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("failure_count"),
-        F.sum(F.when(F.col("error") == "needs_ocr", 1).otherwise(0))
-        .alias("needs_ocr_count"),
-        F.sum(F.when(F.col("error") == "encrypted", 1).otherwise(0))
-        .alias("encrypted_count"),
-        F.sum(F.when(F.col("error") == "timeout", 1).otherwise(0))
-        .alias("timeout_count"),
+        F.count("error").alias("failure_count"),
+        *(F.count_if(F.col("error") == tag).alias(f"{tag}_count")
+          for tag in COUNTED_ERRORS),
         F.slice(F.filter(F.collect_list(F.when(F.col("error").isNotNull(), F.col("url"))),
                          lambda u: u.isNotNull()), 1, 20).alias("failure_urls"),
     )
@@ -212,8 +209,11 @@ def run_extraction_job(
         rej_written = spark.read.parquet(
             os.path.join(rejects_table.root, "data",
                          rejects_table.commits()[key]))
+        per_partition = partition_metrics(written)
+        empty = {f.name: [] if isinstance(f.dataType, ArrayType) else 0
+                 for f in per_partition.schema}
         mrows = {r["partition_id"]: r.asDict()
-                 for r in partition_metrics(written).collect()}
+                 for r in per_partition.collect()}
         rej_counts = {r["partition_id"]: (r["n"], r["b"], r["urls"]) for r in
                       rej_written.groupBy("partition_id")
                       .agg(F.count("*").alias("n"), F.sum("bytes_in").alias("b"),
@@ -235,25 +235,21 @@ def run_extraction_job(
             stats["webhooks_failed"] = stats.get("webhooks_failed", 0) + undeliv
         merged_rows = {}
         for p in group:
-            m = mrows.get(p, {"doc_count": 0, "bytes_in": 0, "bytes_out": 0,
-                              "failure_count": 0, "needs_ocr_count": 0,
-                              "encrypted_count": 0, "failure_urls": []})
+            # every partition_metrics column, plus the gate rejects
+            m = mrows.get(p, empty)
             rn, rb, rurls = rej_counts.get(p, (0, 0, []))
-            merged_rows[p] = {
-                "status": "completed",
-                "doc_count": int(m["doc_count"] or 0),
-                "bytes_in": int((m["bytes_in"] or 0) + (rb or 0)),
-                "bytes_out": int(m["bytes_out"] or 0),
-                "failure_count": int((m["failure_count"] or 0) + rn),
-                "needs_ocr_count": int(m["needs_ocr_count"] or 0),
-                "encrypted_count": int(m["encrypted_count"] or 0),
-                "failure_urls": (list(m["failure_urls"] or []) + list(rurls or []))[:20],
-                "completed_at": done_ts,
-            }
-            stats["docs"] += merged_rows[p]["doc_count"]
-            stats["failures"] += merged_rows[p]["failure_count"]
-            stats["bytes_in"] += merged_rows[p]["bytes_in"]
-            stats["bytes_out"] += merged_rows[p]["bytes_out"]
+            row = {**m,
+                   "status": "completed",
+                   "bytes_in": m["bytes_in"] + (rb or 0),
+                   "failure_count": m["failure_count"] + rn,
+                   "failure_urls": (m["failure_urls"] + rurls)[:20],
+                   "completed_at": done_ts}
+            del row["partition_id"]
+            merged_rows[p] = row
+            stats["docs"] += row["doc_count"]
+            stats["failures"] += row["failure_count"]
+            stats["bytes_in"] += row["bytes_in"]
+            stats["bytes_out"] += row["bytes_out"]
         lineage.merge(merged_rows)                          # … lineage second
         stats["processed_partitions"] += len(group)
 
@@ -272,50 +268,3 @@ def postprocess_results(results: DataFrame) -> DataFrame:
         .withColumn("total_chunks", F.size("chunks"))
         .withColumn("content_length", F.length("markdown").cast("long"))
     )
-
-
-def main() -> None:  # pragma: no cover - CLI
-    ap = argparse.ArgumentParser(description="webtext extraction job")
-    ap.add_argument("--input", required=True)
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--partitions", type=int, default=64)
-    ap.add_argument("--partitions-per-commit", type=int, default=16)
-    ap.add_argument("--max-bytes", type=int, default=MAX_FILE_SIZE)
-    ap.add_argument("--cores", default=os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    ap.add_argument("--prepartition-dir", default=None,
-                    help="rewrite the input partitioned by partition_id "
-                         "into this dir first (skipped if its layout "
-                         "marker already exists), then run from it — "
-                         "resume commit groups then prune at the scan")
-    ap.add_argument("--webhook-url", default=os.environ.get("WEBHOOK_URL"),
-                    help="POST per-doc completion notifications here "
-                         "(reference WEBHOOK_URL, app/main.py:215)")
-    args = ap.parse_args()
-    spark = (
-        SparkSession.builder.master(f"local[{args.cores}]")
-        .appName("webtext-extract")
-        .config("spark.sql.shuffle.partitions", str(int(args.cores) * 4))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-        .getOrCreate()
-    )
-    input_path = args.input
-    if args.prepartition_dir:
-        if _prepartitioned_p(args.prepartition_dir) is None:
-            prepartition_pages(spark, args.input, args.prepartition_dir,
-                               num_partitions=args.partitions)
-        input_path = args.prepartition_dir
-    stats = run_extraction_job(
-        spark, input_path, args.output,
-        num_partitions=args.partitions,
-        partitions_per_commit=args.partitions_per_commit,
-        max_bytes=args.max_bytes,
-        webhook_url=args.webhook_url,
-    )
-    import json
-    print(json.dumps(stats))
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

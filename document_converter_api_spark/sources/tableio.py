@@ -191,8 +191,6 @@ class LineageStore:
     """Per-partition lineage/status rows (FIXTURES.md §4 ``lineage`` schema),
     upserted MERGE-style keyed on partition_id (S9, SURVEY.md §2.1)."""
 
-    STATUSES = ("pending", "processing", "completed", "failed")
-
     def __init__(self, path: str) -> None:
         self.path = path
         os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
@@ -226,34 +224,3 @@ class LineageStore:
         del cur[partition_id]
         _atomic_write_json(self.path, {str(k): v for k, v in cur.items()})
         return True
-
-    def to_dataframe(self, spark: SparkSession) -> DataFrame:
-        from pyspark.sql.types import (
-            ArrayType, IntegerType, LongType, StringType, StructField,
-            StructType, TimestampType,
-        )
-        import datetime as _dt
-
-        schema = StructType([
-            StructField("partition_id", IntegerType()),
-            StructField("status", StringType()),
-            StructField("doc_count", LongType()),
-            StructField("bytes_in", LongType()),
-            StructField("bytes_out", LongType()),
-            StructField("failure_count", LongType()),
-            StructField("failure_urls", ArrayType(StringType())),
-            StructField("started_at", TimestampType()),
-            StructField("completed_at", TimestampType()),
-        ])
-        rows = []
-        for pid, r in sorted(self.load().items()):
-            rows.append((
-                pid, r.get("status"), r.get("doc_count"), r.get("bytes_in"),
-                r.get("bytes_out"), r.get("failure_count"),
-                r.get("failure_urls"),
-                _dt.datetime.fromtimestamp(r["started_at"], _dt.timezone.utc)
-                .replace(tzinfo=None) if r.get("started_at") else None,
-                _dt.datetime.fromtimestamp(r["completed_at"], _dt.timezone.utc)
-                .replace(tzinfo=None) if r.get("completed_at") else None,
-            ))
-        return spark.createDataFrame(rows, schema)

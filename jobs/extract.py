@@ -20,14 +20,16 @@ Sandbox smoke (what tests/test_spark_submit.py runs)::
 
 The job is resumable: re-submitting with the same --output skips partitions
 already marked completed in the lineage store (J3 anti-join semantics,
-SURVEY.md §2.3). All tuning flags deliberately mirror
-document_converter_api_spark.plans.pipeline defaults.
+SURVEY.md §2.3). Flag defaults are ``run_extraction_job``'s keyword
+defaults. This is the one extraction CLI; run it with ``python`` (the
+master defaults to local) or through spark-submit.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 
 from pyspark.sql import SparkSession
 
@@ -45,6 +47,14 @@ def main() -> None:
     ap.add_argument("--partitions-per-commit", type=int, default=16)
     ap.add_argument("--max-bytes", type=int, default=None)
     ap.add_argument("--shuffle-partitions", type=int, default=None)
+    ap.add_argument("--prepartition-dir", default=None,
+                    help="rewrite the (parquet) input partitioned by "
+                         "partition_id into this dir first (skipped if its "
+                         "layout marker already exists), then run from it; "
+                         "resume commit groups then prune at the scan")
+    ap.add_argument("--webhook-url", default=os.environ.get("WEBHOOK_URL"),
+                    help="POST per-doc completion notifications here "
+                         "(reference WEBHOOK_URL, app/main.py:215)")
     args = ap.parse_args()
 
     # Master/resources come from spark-submit flags, not from code: the same
@@ -63,17 +73,28 @@ def main() -> None:
              .getOrCreate())
 
     from document_converter_api_spark.functions.expressions import MAX_FILE_SIZE
-    from document_converter_api_spark.plans.pipeline import run_extraction_job
+    from document_converter_api_spark.plans.pipeline import (
+        _prepartitioned_p,
+        prepartition_pages,
+        run_extraction_job,
+    )
 
+    input_path = args.input
+    if args.prepartition_dir:
+        if _prepartitioned_p(args.prepartition_dir) is None:
+            prepartition_pages(spark, args.input, args.prepartition_dir,
+                               num_partitions=args.partitions)
+        input_path = args.prepartition_dir
     stats = run_extraction_job(
         spark,
-        args.input,
+        input_path,
         args.output,
         num_partitions=args.partitions,
         partitions_per_commit=args.partitions_per_commit,
         max_bytes=args.max_bytes or MAX_FILE_SIZE,
         shuffle_partitions=args.shuffle_partitions,
         input_format=args.input_format,
+        webhook_url=args.webhook_url,
     )
     print(json.dumps(stats))
     spark.stop()

@@ -14,6 +14,7 @@ import shutil
 import pyarrow.parquet as pq
 import pytest
 
+from document_converter_api_spark.extraction.core import COUNTED_ERRORS
 from document_converter_api_spark.plans.pipeline import run_extraction_job
 from document_converter_api_spark.sources.tableio import LineageStore, ManifestTable
 
@@ -78,10 +79,13 @@ def test_kill_then_resume_processes_only_pending(spark, smoke_paths, outdir):
     n_enc = sum(1 for e in gold_errs.values() if e == "encrypted")
     assert sum(r["encrypted_count"] for r in rows.values()) == n_enc
     assert n_enc > 0, "fixture lost its passworded PDFs"
-    assert sum(r["needs_ocr_count"] for r in rows.values()) == sum(
-        1 for e in gold_errs.values() if e == "needs_ocr")
-    assert all(r["failure_count"] >= r["encrypted_count"]
-               + r["needs_ocr_count"] for r in rows.values())
+    # every counted class lands in every completed lineage row
+    for tag in COUNTED_ERRORS:
+        assert sum(r[f"{tag}_count"] for r in rows.values()) == sum(
+            1 for e in gold_errs.values() if e == tag), tag
+    assert all(r["failure_count"] >= sum(r[f"{tag}_count"]
+                                         for tag in COUNTED_ERRORS)
+               for r in rows.values())
 
 
 def _oversize_count(gold_table) -> int:

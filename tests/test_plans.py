@@ -4,7 +4,7 @@ These tests pin the *plan shape*, not timings — the properties that decide
 whether the job survives a 1000-executor / 100 TB scale-up:
 column pruning of the binary payload, filter pushdown to the parquet scan,
 broadcast for point lookups, top-k instead of total sort, and exactly one
-(or zero) shuffle ahead of the Arrow extraction stage.
+shuffle ahead of the Arrow extraction stage.
 """
 
 from __future__ import annotations
@@ -53,15 +53,6 @@ def test_extract_pipeline_has_single_exchange_before_arrow(spark):
     plan = plan_of(results)
     assert n_exchanges(plan) == 1, "exactly one salted repartition"
     assert "MapInArrow" in plan or "ArrowEvalPython" in plan or "PythonMapInArrow" in plan
-
-
-def test_extract_no_pre_shuffle_has_zero_exchange(spark):
-    from document_converter_api_spark.operators.extract import (
-        prepare_pages, run_extract)
-    pages = spark.read.parquet(PAGES_SMOKE)
-    valid, _ = prepare_pages(pages, num_partitions=8)
-    plan = plan_of(run_extract(valid, pre_shuffle=False))
-    assert n_exchanges(plan) == 0, "bucketed input → no shuffle at all"
 
 
 def test_point_lookup_broadcasts(spark):

@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import io
 import os
-import re
 import sys
 from contextlib import redirect_stdout
 
@@ -49,8 +48,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod
-    from document_converter_api_spark.operators.extract import (
-        extract_pipeline, prepare_pages, run_extract)
+    from document_converter_api_spark.operators.extract import extract_pipeline
 
     queries = entrymod.queries()
     sections: list[tuple[str, str, str]] = []
@@ -77,14 +75,7 @@ def main() -> None:
         "the gates stay JVM-side ahead of the shuffle so rejected rows "
         "never shuffle.", results)
 
-    # 3) pre-partitioned variant: NO exchange at all
-    valid, _ = prepare_pages(pages, num_partitions=8)
-    add("extract_no_pre_shuffle",
-        "pre_shuffle=False variant for inputs already bucketed by url-hash "
-        "(Iceberg bucket transform): zero Exchange — scan feeds the Arrow "
-        "stage directly.", run_extract(valid, pre_shuffle=False))
-
-    # 4) representative relational plans
+    # 3) representative relational plans
     for name, note in (
         ("point_lookup", "BroadcastHashJoin expected: tiny key set broadcast, "
          "big side never shuffles."),
@@ -340,7 +331,7 @@ def main() -> None:
     ):
         add(name, note, queries[name](spark, SF))
 
-    # 5) bucketed co-located join: zero Exchange with broadcast disabled
+    # 4) bucketed co-located join: zero Exchange with broadcast disabled
     from document_converter_api_spark.sources.bucketed import bucketed_pair
     docs_b = spark.range(0, 500).select(
         F.col("id").alias("doc_id"), (F.col("id") % 5).cast("string").alias("lang"))
@@ -474,7 +465,6 @@ def main() -> None:
     assert "html" not in plan_by["pages_metadata_scan"].split("ReadSchema")[1].splitlines()[0]
     assert "BroadcastHashJoin" in plan_by["point_lookup"]
     assert "TakeOrderedAndProject" in plan_by["jobs_listing"]
-    assert not re.findall(r"Exchange \(\d+\)", plan_by["extract_no_pre_shuffle"])
     spark.stop()
 
 
