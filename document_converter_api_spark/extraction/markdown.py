@@ -100,10 +100,6 @@ def _inline_one(node: Node) -> str:
 # Block serialization
 # ---------------------------------------------------------------------------
 
-def _plain_len(node: Node) -> int:
-    return len(collapse_ws(node.iter_text()).strip())
-
-
 def _mk_block(kind: str, md: str, node: Node, in_main: bool, level: int = 0) -> Block:
     text, anchors = text_and_anchor_stats(node)
     return Block(kind, md, len(collapse_ws(text).strip()), anchors, in_main, level)

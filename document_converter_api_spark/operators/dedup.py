@@ -31,13 +31,18 @@ deterministic corpus: documents ∪ exact copies (doc_id+10000 for doc_id%5=0)
 engines build the same derivation, so the oracle checks the operator, not
 the data generator.
 
-Lowercasing caveat: the Arrow fast paths use Python ``str.lower`` (simple
-Unicode mapping), which matches DuckDB's utf8proc ``lower`` — i.e. the
-ORACLE — everywhere, while the JVM HOF twins inherit Java's
-context-sensitive special casing (word-final Greek Σ→ς). The
-Python↔JVM parity tests therefore hold on text where simple and
-context-sensitive lowercasing agree (all ASCII and most scripts); on
-final-sigma Greek the Python path is the one that matches the oracle.
+The shingle, MinHash and SimHash signatures have one Spark implementation
+each — an Arrow-batched Python stage — and the DuckDB SQL fragments
+(``_SHINGLES_SQL``, ``_minhash_sigs_sql``, ``_SIMHASH_SQL``) are their
+spec; tests/test_operators.py compares them per doc_id, planted non-ASCII
+rows included. All three stages tokenize with :func:`_words`, which
+lowercases the way DuckDB's ``lower`` does: Python's ``str.lower`` maps a
+word-final Σ to ς and İ to i + U+0307, DuckDB maps them to σ and i, so
+those two are translated first. Out of scope, and not covered by the
+oracle gate: 43 single code points whose lowercase differs because the
+engines ship different Unicode versions (Python's UCD 14.0 vs DuckDB
+1.0.0; e.g. U+2C2F, U+10570), and Catalyst's ``F.lower`` (``q_span_dedup``
+here), which has Java's word-final-sigma behaviour.
 """
 
 from __future__ import annotations
@@ -61,6 +66,10 @@ SIMHASH_BITS = 64
 SIMHASH_BANDS = 4       # 4 × 16-bit bands: pigeonhole guarantees any pair
 SIMHASH_BAND_BITS = 16  # with Hamming ≤ 3 agrees exactly on ≥ 1 band
 HAMMING_MAX = 3
+# pigeonhole: a pair within Hamming ≤ HAMMING_MAX differs in at most that
+# many bands, so it agrees exactly on at least one of SIMHASH_BANDS
+assert SIMHASH_BANDS > HAMMING_MAX
+assert SIMHASH_BANDS * SIMHASH_BAND_BITS == SIMHASH_BITS
 
 
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -82,34 +91,22 @@ _CORPUS_SQL = """
 """
 
 
-def _shingles_of_words(words):
-    """Distinct 3-word shingles from a materialized words ARRAY column.
-
-    ``words`` SHOULD be a real column (see with_shingles) — and the gram
-    build is ``zip_with`` over slices rather than
-    ``transform(sequence, i -> element_at(words, i))`` so that even if a
-    later optimizer pass inlines the split subtree (CollapseProject does
-    this when the input is an aggregate, not a scan — observed as a
-    1,300-CPU-second task in the curation 2-gram twin), each array
-    ARGUMENT is evaluated once per row and the worst case stays
-    O(words), never O(words²) interpreted re-splits."""
-    n = F.greatest(F.size(words) - F.lit(2), F.lit(0))
-    tail_pairs = F.zip_with(
-        F.slice(words, 2, n), F.slice(words, 3, n),
-        lambda b, c: F.concat_ws(" ", b, c))
-    grams = F.zip_with(
-        F.slice(words, 1, n), tail_pairs,
-        lambda a, bc: F.concat_ws(" ", a, bc))
-    return F.array_distinct(F.when(n > 0, grams).otherwise(F.array()))
+# DuckDB's lower maps these two to σ and i; Python's maps a word-final Σ
+# to ς and İ to i + U+0307 (see the module docstring)
+_DUCKDB_CASE = str.maketrans({"Σ": "σ", "İ": "i"})
 
 
-def with_shingles(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """df + ``sh`` column. ``words`` goes through a projection boundary so
-    CollapseProject keeps it materialized (multi-use non-cheap alias)."""
-    return (widen(df)
-            .withColumn("words", F.split(F.lower(F.col(text_col)), " ", -1))
-            .withColumn("sh", _shingles_of_words(F.col("words")))
-            .drop("words"))
+def _words(text: str) -> list[str]:
+    """The signature stages' tokenizer, the Python side of
+    ``str_split(lower(text), ' ')``."""
+    return text.translate(_DUCKDB_CASE).lower().split(" ")
+
+
+def _shingle_set(words: list[str]) -> set[str]:
+    """Distinct 3-word shingles; empty below 3 words."""
+    return {words[i] + " " + words[i + 1] + " " + words[i + 2]
+            for i in range(len(words) - 2)}
+
 
 _SHINGLES_SQL = """
     list_distinct(CASE WHEN len(str_split(lower(text), ' ')) >= 3 THEN
@@ -154,12 +151,8 @@ def _shingle_rows_batches(it):
         shingles: list[str] = []
         for doc_id, text in zip(pdf["doc_id"].values, pdf["text"].values):
             if not isinstance(text, str):
-                continue  # NULL text: JVM/oracle twins drop via len(sh)>0
-            words = text.lower().split(" ")
-            if len(words) < 3:
                 continue
-            seen = {words[i] + " " + words[i + 1] + " " + words[i + 2]
-                    for i in range(len(words) - 2)}
+            seen = _shingle_set(_words(text))
             n = len(seen)
             ids.extend([doc_id] * n)
             ns.extend([n] * n)
@@ -216,39 +209,15 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 3. MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def _minhash_sig(sh):
-    """K=8 minima over the shingle set from TWO md5 evaluations per shingle
-    (not K): each 128-bit digest yields four independent 32-bit pieces
-    (8 hex chars), and lowercase hex is lexicographically monotonic in the
-    integer value, so string-min == numeric min. The fold is a single
-    ``F.aggregate`` pass referencing the hash array exactly once — writing
-    K separate ``array_min(transform(...))`` expressions would duplicate
-    the md5 subtree K times in the plan (higher-order functions are outside
-    whole-stage codegen, so common-subexpression elimination cannot be
-    relied on). Measured ~3x faster at sf0.1. Init 'g' sorts after every
-    hex char, i.e. acts as +infinity.
-
-    NB: lambdas must be unary — F.transform treats a 2-arg lambda as
-    (element, index), which would silently replace the hash key with the
-    array position."""
-    hashes = F.transform(sh, lambda s: F.concat(
-        F.md5(F.concat(F.lit("0|"), s)), F.md5(F.concat(F.lit("1|"), s))))
-    init = F.array(*[F.lit("g") for _ in range(N_MINHASH)])
-    return F.aggregate(
-        hashes, init,
-        lambda acc, h: F.array(*[
-            F.least(F.element_at(acc, k + 1), F.substring(h, k * 8 + 1, 8))
-            for k in range(N_MINHASH)]))
-
-
 def _minhash_sig_batches(it):
-    """Arrow-batched MinHash signatures: same algorithm/bytes as
-    :func:`_minhash_sig` (two keyed md5s per distinct shingle, string-min
-    over 8-hex-char pieces) but computed with ``hashlib`` in one Python pass
-    per batch. The JVM fold runs interpreted (no whole-stage codegen for
-    higher-order lambdas) and re-allocates the 8-slot accumulator array per
-    shingle; measured 5x faster here at sf0.1 with byte-identical output
-    (pinned by tests/test_operators.py)."""
+    """Arrow-batched MinHash signatures: K=8 minima over the distinct
+    shingles from TWO md5s per shingle (not K) — each 128-bit digest
+    yields four 32-bit pieces (8 hex chars), and lowercase hex is
+    lexicographically monotonic in the integer value, so string-min ==
+    numeric min ('g' sorts after every hex char: +infinity). Docs with no
+    shingle get no row. A JVM higher-order fold of the same math runs
+    interpreted (no whole-stage codegen for lambdas); this pass measured
+    5x faster at sf0.1."""
     from hashlib import md5
 
     import pandas as pd
@@ -258,17 +227,12 @@ def _minhash_sig_batches(it):
         out_sigs: list[list[str]] = []
         for doc_id, text in zip(pdf["doc_id"].values, pdf["text"].values):
             if not isinstance(text, str):
-                continue  # NULL text: JVM/oracle twins drop via len(sh)>0
-            words = text.lower().split(" ")
-            if len(words) < 3:
                 continue
-            seen: set[str] = set()
+            shingles = _shingle_set(_words(text))
+            if not shingles:
+                continue
             mins = ["g" * 8] * N_MINHASH
-            for i in range(len(words) - 2):
-                s = words[i] + " " + words[i + 1] + " " + words[i + 2]
-                if s in seen:
-                    continue
-                seen.add(s)
+            for s in shingles:
                 b = s.encode()
                 h = md5(b"0|" + b).hexdigest() + md5(b"1|" + b).hexdigest()
                 for k in range(N_MINHASH):
@@ -280,13 +244,54 @@ def _minhash_sig_batches(it):
         yield pd.DataFrame({"doc_id": out_ids, "sig": out_sigs})
 
 
+def _sig_frame(spark_df: DataFrame) -> DataFrame:
+    """MinHash signatures ``(doc_id, sig)`` for any (doc_id, text) frame."""
+    return spark_df.mapInPandas(_minhash_sig_batches,
+                                "doc_id long, sig array<string>")
+
+
+def _bands_of(sigs: DataFrame, id_name: str) -> DataFrame:
+    return (sigs.select(
+                F.col("doc_id").alias(id_name),
+                F.explode(F.array(*[
+                    F.struct(F.lit(j).alias("band"),
+                             F.concat_ws("|",
+                                         *[F.element_at("sig", j * 2 + r + 1)
+                                           for r in range(2)]).alias("bval"))
+                    for j in range(N_BANDS)])).alias("bb"))
+            .select(id_name, "bb.band", "bb.bval"))
+
+
+def _minhash_sigs_sql(src: str) -> str:
+    """DuckDB spec of :func:`_sig_frame` over the (doc_id, text) relation
+    ``src``: the same two keyed md5s per distinct shingle and K minima of
+    8-hex-char pieces, no row for a doc without shingles."""
+    mins = ", ".join(
+        f"list_aggregate(list_transform(hs, x -> x[{k * 8 + 1}:{k * 8 + 8}]),"
+        f" 'min')" for k in range(N_MINHASH))
+    return f"""
+        SELECT doc_id, [{mins}] AS sig FROM (
+          SELECT doc_id, list_transform(shingles,
+                   s -> md5('0|' || s) || md5('1|' || s)) AS hs
+          FROM (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM {src})
+          WHERE len(shingles) > 0)"""
+
+
+def _minhash_bands_sql(sigs: str) -> str:
+    """DuckDB spec of :func:`_bands_of` over the (doc_id, sig) relation
+    ``sigs``."""
+    return " UNION ALL ".join(
+        f"SELECT doc_id, {j} AS band,"
+        f" sig[{j * 2 + 1}] || '|' || sig[{j * 2 + 2}] AS bval FROM {sigs}"
+        for j in range(N_BANDS))
+
+
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs: equal (band_id, band_value) bucket → distinct
     pairs (a < b). Shuffle cost O(docs × N_BANDS) on short digest strings —
     the 10^12-doc-scale near-dup plan."""
-    sigs = _persist_swap("minhash_sigs", widen(_corpus(spark, sf_dir))
-                         .mapInPandas(_minhash_sig_batches,
-                                      "doc_id long, sig array<string>"))
+    sigs = _persist_swap("minhash_sigs",
+                         _sig_frame(widen(_corpus(spark, sf_dir))))
     bands = _bands_of(sigs, "doc_id")
     # Band-key equi-self-join over the PERSISTED signature table (ReuseExchange
     # does not fire across a/b aliases — verified in the formatted plan — so
@@ -421,44 +426,14 @@ _CLUSTERS_ORACLE = """
 _LONG_MIN = -9223372036854775808  # two's-complement value of bit 63
 
 
-def _simhash_from_hashes(hh):
-    """64-bit simhash: bit b = majority over token OCCURRENCES of bit
-    ``b % 4`` of md5-hex-nibble ``b // 4``. Integer-only (+1/-1 sums; ties
-    → bit set) for cross-engine determinism. Bit 63 contributes the
-    two's-complement constant so the signature stays a signed LongType —
-    the same arithmetic the DuckDB oracle and the Arrow fast path use.
-
-    ``hh`` MUST be a materialized column of per-token md5 hex strings:
-    hashing inline here would recompute md5 per token per BIT (64x), since
-    the per-bit folds each reference the array independently and
-    higher-order lambdas get no codegen/CSE.
-
-    This JVM form is the executable spec pinned byte-equal to
-    :func:`_simhash_batches` in tests; the Arrow form is the fast path."""
-    def bit_sum(b):
-        pos, k = b // 4 + 1, b % 4
-        return F.aggregate(
-            hh, F.lit(0),
-            lambda acc, h: acc + F.when(
-                F.shiftright(F.conv(F.substring(h, pos, 1), 16, 10)
-                             .cast("int"), k).bitwiseAND(F.lit(1)) == 1,
-                1).otherwise(-1))
-    val = F.lit(0).cast("long")
-    for b in range(SIMHASH_BITS - 1):
-        val = val + F.when(bit_sum(b) >= 0,
-                           F.lit(1 << b).cast("long")).otherwise(F.lit(0))
-    val = val + F.when(bit_sum(SIMHASH_BITS - 1) >= 0,
-                       F.lit(_LONG_MIN)).otherwise(F.lit(0))
-    return val
-
-
 def _simhash_batches(it):
-    """Arrow-batched 64-bit simhash: same bit-majority semantics as
-    :func:`_simhash_from_hashes` (every token OCCURRENCE votes ±1 per
-    nibble-bit, ties set the bit) with a per-batch token→votes memo —
-    tokens repeat heavily, and the JVM version cannot share the md5 across
-    its 64 per-bit folds (pinned equal in tests/test_operators.py). Votes
-    are memoized as ±1 int16 vectors so a document is one numpy sum."""
+    """Arrow-batched 64-bit simhash: bit b = majority over token
+    OCCURRENCES of bit ``b % 4`` of md5-hex-nibble ``b // 4``.
+    Integer-only (+1/-1 sums; ties → bit set) for cross-engine
+    determinism; bit 63 contributes the two's-complement constant so the
+    signature stays a signed LongType. Tokens repeat heavily, so votes are
+    memoized per batch as ±1 int16 vectors and a document is one numpy
+    sum. NULL text keeps its row with simhash 0."""
     from hashlib import md5
 
     import numpy as np
@@ -479,13 +454,11 @@ def _simhash_batches(it):
         out_sigs: list[int] = []
         for doc_id, text in zip(pdf["doc_id"].values, pdf["text"].values):
             if not isinstance(text, str):
-                # NULL text: both twins KEEP the row with simhash 0 (every
-                # per-bit vote folds over a NULL array → CASE falls through)
                 out_ids.append(doc_id)
                 out_sigs.append(0)
                 continue
             counts = np.zeros(SIMHASH_BITS, dtype=np.int64)
-            for t in text.lower().split(" "):
+            for t in _words(text):
                 v = memo.get(t)
                 if v is None:
                     v = memo[t] = token_votes(t)
@@ -520,19 +493,11 @@ def _persist_swap(key: str, df: DataFrame) -> DataFrame:
     return df
 
 
-def simhash_pairs(sigs: DataFrame, *, bands: int = SIMHASH_BANDS,
-                  band_bits: int = SIMHASH_BAND_BITS,
-                  hamming_max: int = HAMMING_MAX) -> DataFrame:
-    """Near-dup pairs with Hamming ≤ ``hamming_max`` from a ``(doc_id,
-    simhash)`` signature table, via banding + band-key self-JOIN.
-
-    Pigeonhole: ``bands`` disjoint ``band_bits``-bit slices catch any pair
-    within Hamming ≤ bands−1 (a pair that close agrees EXACTLY on ≥ 1
-    band), so ``bands`` must exceed ``hamming_max`` — asserted. The knob
-    for corpus scale: 4×16 default (65k buckets/band — right up to ~10^8
-    docs); at 10^10–10^12 docs switch to 8×8-band keys salt-free — more,
-    smaller buckets, same guarantee for Hamming ≤ 3, identical output
-    (pinned by ``test_simhash_band_knob_is_result_invariant``).
+def simhash_pairs(sigs: DataFrame) -> DataFrame:
+    """Near-dup pairs with Hamming ≤ ``HAMMING_MAX`` from a ``(doc_id,
+    simhash)`` signature table, via banding + band-key self-JOIN over
+    ``SIMHASH_BANDS`` disjoint ``SIMHASH_BAND_BITS``-bit slices (the
+    pigeonhole bound is asserted next to the constants).
 
     Pair expansion is a band-key equi-self-join, NOT a
     ``collect_set``+double-explode: a hot bucket is never materialized as
@@ -542,23 +507,21 @@ def simhash_pairs(sigs: DataFrame, *, bands: int = SIMHASH_BANDS,
     table is persisted (MEMORY_AND_DISK) so the Python signature stage
     computes ONCE for both join sides — 16 bytes/doc, disk-spillable, vs
     re-running the tokenize+vote stage over the corpus text."""
-    assert bands > hamming_max, "pigeonhole needs bands > hamming_max"
-    assert bands * band_bits == SIMHASH_BITS
     sigs = _persist_swap("simhash_sigs", sigs)
-    mask = F.lit((1 << band_bits) - 1)
+    mask = F.lit((1 << SIMHASH_BAND_BITS) - 1)
     bands_df = sigs.select(
         "doc_id", "simhash",
         F.explode(F.array(*[
             F.struct(F.lit(j).alias("band"),
-                     F.shiftright("simhash", j * band_bits)
+                     F.shiftright("simhash", j * SIMHASH_BAND_BITS)
                      .bitwiseAND(mask).alias("bval"))
-            for j in range(bands)
+            for j in range(SIMHASH_BANDS)
         ])).alias("bb")
     ).select("doc_id", "simhash", "bb.band", "bb.bval")
     # Both join inputs are the IDENTICAL plan (aliases only; projections
     # applied after the join) so the band-key Exchange canonicalizes equal
     # and ReusedExchange computes the Python signature stage ONCE —
-    # pinned by test_simhash_signature_stage_runs_once.
+    # pinned by test_simhash_expansion_has_no_bucket_arrays_and_caches_sigs.
     left, right = bands_df.alias("l"), bands_df.alias("r")
     pairs = (left.join(right,
                        (F.col("l.band") == F.col("r.band"))
@@ -569,7 +532,7 @@ def simhash_pairs(sigs: DataFrame, *, bands: int = SIMHASH_BANDS,
                      F.bit_count(F.col("l.simhash")
                                  .bitwiseXOR(F.col("r.simhash")))
                      .alias("hamming")))
-    return (pairs.filter(F.col("hamming") <= hamming_max)
+    return (pairs.filter(F.col("hamming") <= HAMMING_MAX)
             .distinct()  # a pair can agree on several bands
             .orderBy("id_a", "id_b"))
 
@@ -583,14 +546,13 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Band keys are (band_id, 16-bit value): up to 4×65536 buckets whose
     occupancy scales with corpus cardinality. Signatures computed once,
     one shuffle on the band key, exact Hamming re-check inside buckets
-    only — see :func:`simhash_pairs` for the join-based expansion and the
-    band-count scale knob."""
+    only — see :func:`simhash_pairs` for the join-based expansion."""
     sigs = widen(_corpus(spark, sf_dir)).mapInPandas(
         _simhash_batches, "doc_id long, simhash long")
     return simhash_pairs(sigs)
 
 
-# 64-bit simhash twin: md5 evaluated ONCE per token occurrence (unnest +
+# 64-bit simhash spec: md5 evaluated ONCE per token occurrence (unnest +
 # group-by-doc), per-bit votes from the 16 leading hex nibbles, bit 63 as
 # the two's-complement constant so the BIGINT arithmetic matches Spark's
 # signed LongType exactly. NULL-text docs re-enter via LEFT JOIN at 0.
@@ -838,22 +800,8 @@ DEDUP_ORACLES = {
     """,
     "dedup_minhash_lsh": f"""
         WITH corpus AS ({_CORPUS_SQL}),
-        sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM corpus),
-        sized AS (SELECT doc_id, shingles FROM sh WHERE len(shingles) > 0),
-        hh AS (SELECT doc_id,
-                      list_transform(shingles,
-                                     s -> md5('0|' || s) || md5('1|' || s)) AS hs
-               FROM sized),
-        sigs AS (SELECT doc_id,
-            [{", ".join(
-                f"list_aggregate(list_transform(hs, x -> x[{k * 8 + 1}:{k * 8 + 8}]), 'min')"
-                for k in range(N_MINHASH))}] AS sig
-          FROM hh),
-        bands AS (
-          {" UNION ALL ".join(
-              f"SELECT doc_id, {j} AS band, sig[{j * 2 + 1}] || '|' || sig[{j * 2 + 2}] AS bval FROM sigs"
-              for j in range(N_BANDS))}
-        )
+        sigs AS ({_minhash_sigs_sql("corpus")}),
+        bands AS ({_minhash_bands_sql("sigs")})
         SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
         FROM bands a JOIN bands b
           ON a.band = b.band AND a.bval = b.bval AND a.doc_id < b.doc_id
@@ -1199,26 +1147,6 @@ DEDUP_ORACLES["incremental_dedup"] = _incremental_dedup_oracle()
 # 10. Incremental NEAR-dup: MinHash-band the new crawl against history
 # ---------------------------------------------------------------------------
 
-def _sig_frame(spark_df: DataFrame) -> DataFrame:
-    """MinHash signatures for any (doc_id, text) frame — the same
-    Arrow-batched hashlib pass (and byte-identical math) the self-join
-    LSH uses."""
-    return spark_df.mapInPandas(_minhash_sig_batches,
-                                "doc_id long, sig array<string>")
-
-
-def _bands_of(sigs: DataFrame, id_name: str) -> DataFrame:
-    return (sigs.select(
-                F.col("doc_id").alias(id_name),
-                F.explode(F.array(*[
-                    F.struct(F.lit(j).alias("band"),
-                             F.concat_ws("|",
-                                         *[F.element_at("sig", j * 2 + r + 1)
-                                           for r in range(2)]).alias("bval"))
-                    for j in range(N_BANDS)])).alias("bb"))
-            .select(id_name, "bb.band", "bb.bval"))
-
-
 def q_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate linkage of a NEW crawl against the HISTORICAL
     corpus — the fuzzy complement of ``incremental_dedup`` (which only
@@ -1303,13 +1231,6 @@ def best_band_match(new_sigs: DataFrame, old_sigs: DataFrame) -> DataFrame:
 
 
 def _incremental_minhash_oracle() -> str:
-    sig_exprs = ", ".join(
-        f"list_aggregate(list_transform(hs, x -> x[{k * 8 + 1}:{k * 8 + 8}]),"
-        f" 'min')" for k in range(N_MINHASH))
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {j} AS band,"
-        f" sig[{j * 2 + 1}] || '|' || sig[{j * 2 + 2}] AS bval FROM SIGSRC"
-        for j in range(N_BANDS))
     agree = " + ".join(
         f"CASE WHEN sn[{k + 1}] = so[{k + 1}] THEN 1 ELSE 0 END"
         for k in range(N_MINHASH))
@@ -1320,18 +1241,10 @@ def _incremental_minhash_oracle() -> str:
           UNION ALL
           SELECT doc_id * 2 + 1 AS doc_id, reverse(text) AS text
           FROM documents WHERE doc_id % 7 = 0),
-        osh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM documents),
-        nsh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM new_),
-        ohh AS (SELECT doc_id, list_transform(shingles,
-                   s -> md5('0|' || s) || md5('1|' || s)) AS hs
-                FROM osh WHERE len(shingles) > 0),
-        nhh AS (SELECT doc_id, list_transform(shingles,
-                   s -> md5('0|' || s) || md5('1|' || s)) AS hs
-                FROM nsh WHERE len(shingles) > 0),
-        osig AS (SELECT doc_id, [{sig_exprs}] AS sig FROM ohh),
-        nsig AS (SELECT doc_id, [{sig_exprs}] AS sig FROM nhh),
-        oband AS ({band_rows.replace("SIGSRC", "osig")}),
-        nband AS ({band_rows.replace("SIGSRC", "nsig")}),
+        osig AS ({_minhash_sigs_sql("documents")}),
+        nsig AS ({_minhash_sigs_sql("new_")}),
+        oband AS ({_minhash_bands_sql("osig")}),
+        nband AS ({_minhash_bands_sql("nsig")}),
         cand AS (
           SELECT DISTINCT n.doc_id AS new_id, o.doc_id AS old_id
           FROM nband n JOIN oband o USING (band, bval)),

@@ -27,7 +27,7 @@ aggregate. Prefix match is ``startswith`` (Spark) / ``starts_with``
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .linkgraph import HOST_RE, all_pages_df, pages_path
@@ -36,13 +36,20 @@ from .linkgraph import HOST_RE, all_pages_df, pages_path
 # around the colon is flexible — real robots.txt carries 'allow:/x',
 # 'SITEMAP: …', ' Crawl-Delay : 5' (round-4 advice). The line anchor
 # replaces the old capital-A trick: case-insensitively, "allow:" occurs
-# INSIDE "Disallow:", so only a ^-anchored match (multiline; Java and
-# RE2 agree on \n and \r\n terminators) keeps the two directives
-# distinct. Both engines get the same patterns.
+# INSIDE "Disallow:", so only a ^-anchored match keeps the two directives
+# distinct. Both engines get the same patterns, applied to bodies whose
+# line endings are normalized to \n first: in multiline mode Java also
+# starts a line after a bare \r, RE2 only after \n.
 DISALLOW_RE = "(?im)^[ \\t]*disallow[ \\t]*:[ \\t]*(\\S+)"
 ALLOW_RE = "(?im)^[ \\t]*allow[ \\t]*:[ \\t]*(\\S+)"
 DELAY_RE = "(?im)^[ \\t]*crawl-delay[ \\t]*:[ \\t]*([0-9]+)"
 SITEMAP_RE = "(?im)^[ \\t]*sitemap[ \\t]*:[ \\t]*(\\S+)"
+
+
+def _body() -> Column:
+    """The robots.txt text: latin-1 (ascii rules; never errors), with
+    \\r\\n and bare \\r line endings rewritten to \\n."""
+    return F.regexp_replace(F.decode("html", "ISO-8859-1"), "\\r\\n?", "\n")
 
 
 def robots_rules(pages: DataFrame) -> DataFrame:
@@ -53,7 +60,7 @@ def robots_rules(pages: DataFrame) -> DataFrame:
     explode would drop the host entirely — losing the delay the
     scheduler needs (round-3 review). Such hosts emit one row with
     ``rule IS NULL``."""
-    body = F.decode("html", "ISO-8859-1")  # ascii rules; never errors
+    body = _body()
     return (pages
             .filter(F.col("url").endswith("/robots.txt"))
             .select(
@@ -61,9 +68,8 @@ def robots_rules(pages: DataFrame) -> DataFrame:
                 F.explode_outer(
                     F.regexp_extract_all(body, F.lit(DISALLOW_RE), 1))
                 .alias("rule"),
-                F.expr(f"CAST(nullif(regexp_extract(decode(html, "
-                       f"'ISO-8859-1'), '{DELAY_RE}', 1), '') AS BIGINT)")
-                .alias("crawl_delay")))
+                F.nullif(F.regexp_extract(body, DELAY_RE, 1), F.lit(""))
+                .cast("bigint").alias("crawl_delay")))
 
 
 def q_robots_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,10 +119,9 @@ def q_robots_precedence(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct ordering encodes longest-then-Allow exactly; then one
     map-side-combined host rollup."""
     rows = all_pages_df(spark)
-    body = F.decode("html", "ISO-8859-1")
     robots = (rows.filter(F.col("url").endswith("/robots.txt"))
               .select(F.regexp_extract("url", HOST_RE, 1).alias("host"),
-                      body.alias("body")))
+                      _body().alias("body")))
     directives = robots.select(
         "host",
         F.explode(F.concat(
@@ -167,14 +172,13 @@ def q_sitemap_directives(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents, so declaring hosts show ``already_fetched`` true and
     ``operators/sitemap.py`` consumes the bodies)."""
     rows = all_pages_df(spark)
-    body = F.decode("html", "ISO-8859-1")
     # ALL declared sitemaps, one row each (RFC 9309 / sitemaps.org allow
     # multiple Sitemap: lines); explode_outer keeps a NULL row for hosts
     # declaring none, so every host stays in the audit
     decl = (rows.filter(F.col("url").endswith("/robots.txt"))
             .select(F.regexp_extract("url", HOST_RE, 1).alias("host"),
                     F.explode_outer(
-                        F.regexp_extract_all(body, F.lit(SITEMAP_RE), 1))
+                        F.regexp_extract_all(_body(), F.lit(SITEMAP_RE), 1))
                     .alias("sitemap_url")))
     crawled = rows.select(F.col("url").alias("sitemap_url")).distinct()
     # flag per (host, sitemap_url): with several declared sitemaps a
@@ -256,9 +260,11 @@ _LATIN1_BODY = """array_to_string(list_transform(
                    i -> chr(CAST(concat('0x', substr(hex(html),
                             2 * CAST(i AS INT) - 1, 2)) AS INT))), '')"""
 
+# the same \r\n? -> \n normalization as the Spark side's _body()
 _BODIES_CTE = f"""
         bodies AS (
-          SELECT url, {_LATIN1_BODY} AS body
+          SELECT url, regexp_replace({_LATIN1_BODY}, '\\r\\n?', chr(10), 'g')
+                 AS body
           FROM '__PAGES_PARQUET__'
           WHERE url LIKE '%/robots.txt')"""
 

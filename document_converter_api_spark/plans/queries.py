@@ -32,6 +32,7 @@ from ..functions.expressions import (
     markdown_to_plain_expr,
     mb_expr,
     preview_expr,
+    processing_seconds_expr,
     sanitize_filename_expr,
     url_extension_expr,
 )
@@ -250,8 +251,9 @@ def q_iso_timestamps(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("next_ts").isNotNull())
             .select("event_id",
                     iso_timestamp_expr(F.col("ts")).alias("ts_iso"),
-                    F.round((F.unix_micros(F.col("next_ts").cast("timestamp"))
-                             - F.unix_micros(F.col("ts").cast("timestamp"))) / 1e6, 3)
+                    F.round(processing_seconds_expr(
+                        F.col("ts").cast("timestamp"),
+                        F.col("next_ts").cast("timestamp")), 3)
                     .alias("gap_seconds"))
             .orderBy("event_id").limit(500))
 

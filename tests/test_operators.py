@@ -225,21 +225,6 @@ class TestSimhashBanding:
         # near-unique occupancy on a small corpus: most docs hash alone
         assert n_keys > 2 * n_docs
 
-    def test_simhash_band_knob_is_result_invariant(self, spark):
-        """The 10^12-doc scale knob: 8×8-bit bands (256 buckets/band,
-        but 8 bands — pigeonhole covers Hamming ≤ 7 ⊇ ≤ 3) must produce
-        EXACTLY the pairs the default 4×16 banding does, because banding
-        only generates candidates and the Hamming re-check is shared."""
-        from document_converter_api_spark.operators import dedup as D
-        sf = "/root/testdata/sf0.001"
-        sigs = (D._corpus(spark, sf)
-                .mapInPandas(D._simhash_batches, "doc_id long, simhash long"))
-        base = {(r.id_a, r.id_b, r.hamming)
-                for r in D.simhash_pairs(sigs).collect()}
-        knob = {(r.id_a, r.id_b, r.hamming)
-                for r in D.simhash_pairs(sigs, bands=8, band_bits=8).collect()}
-        assert base == knob and base
-
     def test_simhash_expansion_has_no_bucket_arrays_and_caches_sigs(self, spark):
         """Scale pins for the join-based expansion: no collect_set bucket
         materialization anywhere in the plan (a hot bucket must never be
@@ -493,50 +478,75 @@ class TestAnnScaleParameters:
             assert 1 <= r.rank <= S.IVF_TOP_K
 
 
-class TestDedupArrowJvmParity:
-    """The Arrow-batched Python signature stages must be byte-equal to their
-    pure-JVM higher-order-function twins (the HOF forms stay in the module
-    as the executable spec; the Python forms are the fast path)."""
+class TestDedupSignatureOracle:
+    """Each Arrow signature stage equals its DuckDB SQL fragment per
+    doc_id, including the planted Greek, Turkish, NULL, two-word and
+    repeated-shingle rows."""
 
     SF = "/root/testdata/sf0.001"
+    PLANTED = [
+        (90001, "ΟΔΟΣ ΤΗΣ ΠΟΛΗΣ ΚΑΙ Η ΟΔΟΣ ΤΟΥ ΝΟΜΟΥ"),  # word-final Σ
+        (90002, "İSTANBUL İLİ VE İZMİR İLİ"),           # dotted capital I
+        (90003, None),
+        (90004, "two words"),
+        (90005, "a b c a b c a b c"),                   # repeated shingles
+    ]
 
-    def test_minhash_pandas_equals_hof(self, spark):
-        from document_converter_api_spark.operators import dedup as D
-        corpus = D._corpus(spark, self.SF)
-        py = (corpus.mapInPandas(D._minhash_sig_batches,
-                                 "doc_id long, sig array<string>")
-              .select("doc_id", F.concat_ws(",", "sig").alias("s")))
-        hof = (D.with_shingles(corpus).filter(F.size("sh") > 0)
-               .select("doc_id", D._minhash_sig(F.col("sh")).alias("sig"))
-               .select("doc_id", F.concat_ws(",", "sig").alias("s")))
-        assert py.exceptAll(hof).count() == 0
-        assert hof.exceptAll(py).count() == 0
+    @pytest.fixture(scope="class")
+    def signature_corpus(self, spark):
+        """The sf0.001 derived dedup corpus plus the planted rows, as one
+        DuckDB table ``corpus`` and the same rows as a Spark frame, so
+        both engines sign identical input."""
+        import duckdb
 
-    def test_shingle_rows_pandas_equals_hof(self, spark):
         from document_converter_api_spark.operators import dedup as D
-        corpus = D._corpus(spark, self.SF)
-        py = corpus.mapInPandas(D._shingle_rows_batches,
-                                "doc_id long, n_sh int, shingle string")
-        sized = (D.with_shingles(corpus)
-                 .select("doc_id", "sh", F.size("sh").alias("n_sh"))
-                 .filter("n_sh > 0"))
-        hof = sized.select("doc_id", F.col("n_sh").cast("int").alias("n_sh"),
-                           F.explode("sh").alias("shingle"))
-        assert py.exceptAll(hof).count() == 0
-        assert hof.exceptAll(py).count() == 0
+        con = duckdb.connect()
+        con.execute("CREATE VIEW documents AS SELECT * FROM "
+                    f"'{self.SF}/documents.parquet'")
+        con.execute(f"CREATE TABLE corpus AS {D._CORPUS_SQL}")
+        con.executemany("INSERT INTO corpus VALUES (?, ?)", self.PLANTED)
+        rows = con.execute("SELECT doc_id, text FROM corpus").fetchall()
+        yield con, spark.createDataFrame(rows, "doc_id long, text string")
+        con.close()
 
-    def test_simhash_pandas_equals_hof(self, spark):
+    @staticmethod
+    def _mismatched(got: dict, want: dict) -> list:
+        return sorted(d for d in got.keys() | want.keys()
+                      if got.get(d) != want.get(d))
+
+    def test_shingle_rows_match_oracle(self, signature_corpus):
         from document_converter_api_spark.operators import dedup as D
-        corpus = D._corpus(spark, self.SF)
-        py = corpus.mapInPandas(D._simhash_batches,
-                                "doc_id long, simhash long")
-        hof = (corpus
-               .withColumn("toks", F.split(F.lower(F.col("text")), " ", -1))
-               .withColumn("hh", F.transform(F.col("toks"), F.md5))
-               .select("doc_id",
-                       D._simhash_from_hashes(F.col("hh")).alias("simhash")))
-        assert py.exceptAll(hof).count() == 0
-        assert hof.exceptAll(py).count() == 0
+        con, corpus = signature_corpus
+        rows: dict = {}
+        for r in corpus.mapInPandas(
+                D._shingle_rows_batches,
+                "doc_id long, n_sh int, shingle string").collect():
+            rows.setdefault(r.doc_id, []).append((r.n_sh, r.shingle))
+        got = {d: sorted(rs) for d, rs in rows.items()}
+        want = {d: sorted((len(sh), s) for s in sh)
+                for d, sh in con.execute(
+                    f"SELECT doc_id, {D._SHINGLES_SQL} FROM corpus").fetchall()
+                if sh}
+        assert self._mismatched(got, want) == []
+        assert 90001 in want and 90002 in want and 90005 in want
+
+    def test_minhash_sigs_match_oracle(self, signature_corpus):
+        from document_converter_api_spark.operators import dedup as D
+        con, corpus = signature_corpus
+        got = {r.doc_id: list(r.sig) for r in D._sig_frame(corpus).collect()}
+        want = dict(con.execute(D._minhash_sigs_sql("corpus")).fetchall())
+        assert self._mismatched(got, want) == []
+        assert 90001 in want and 90004 not in want
+
+    def test_simhash_sigs_match_oracle(self, signature_corpus):
+        from document_converter_api_spark.operators import dedup as D
+        con, corpus = signature_corpus
+        got = dict(corpus.mapInPandas(
+            D._simhash_batches, "doc_id long, simhash long").collect())
+        want = dict(con.execute(
+            f"SELECT doc_id, simhash FROM {D._SIMHASH_SQL} s").fetchall())
+        assert self._mismatched(got, want) == []
+        assert want[90003] == 0
 
 
 class TestScanWiden:

@@ -334,47 +334,49 @@ class TestPrecedenceAndSitemaps:
         assert any(fetched_flags) and not all(fetched_flags)
 
 
-def test_directive_parsing_is_rfc9309_flexible(spark):
+@pytest.mark.parametrize("eol", ["\n", "\r\n", "\r"],
+                         ids=["lf", "crlf", "cr"])
+def test_directive_parsing_is_rfc9309_flexible(spark, tmp_path, eol):
     """RFC 9309 §2.1 (round-4 advice): directive names case-insensitive,
     whitespace around the colon flexible, directives anchored at line
     start (case-insensitively 'allow:' occurs INSIDE 'Disallow:', so
     only the anchor keeps them distinct), comments and lookalike names
-    never match. Both engines parse the same hostile body identically."""
+    never match. Both engines read the hostile body through their
+    line-ending-normalized body expression and parse it identically,
+    whatever the line terminator (Java's multiline ^ also matches after
+    a bare CR, RE2's does not)."""
     import duckdb
+    import pyarrow as pa
 
-    from document_converter_api_spark.operators.robots import (
-        ALLOW_RE,
-        DELAY_RE,
-        DISALLOW_RE,
-        SITEMAP_RE,
-        robots_rules,
-    )
-
-    body = ("User-agent: *\n"
-            "allow:/lower\n"
-            "DISALLOW: /upper\n"
-            "Disallow: /canonical\n"
-            " \tdisAllow \t: /padded\n"
-            "crawl-delay : 7\n"
-            "SITEMAP: https://h.example/s.xml\n"
-            "# allow: /commented-out\n"
-            "Xdisallow: /lookalike\n")
-    pages = spark.createDataFrame(
-        [("https://h.example/robots.txt", body.encode("ascii"))],
-        "url string, html binary")
-    rows = robots_rules(pages).collect()
+    body = eol.join(["User-agent: *",
+                     "allow:/lower",
+                     "DISALLOW: /upper",
+                     "Disallow: /canonical",
+                     " \tdisAllow \t: /padded",
+                     "crawl-delay : 7",
+                     "SITEMAP: https://h.example/s.xml",
+                     "# allow: /commented-out",
+                     "Xdisallow: /lookalike", ""])
+    row = {"url": "https://h.example/robots.txt", "html": body.encode("ascii")}
+    pages = spark.createDataFrame([tuple(row.values())],
+                                  "url string, html binary")
+    rows = R.robots_rules(pages).collect()
     assert sorted(r["rule"] for r in rows) == [
         "/canonical", "/padded", "/upper"]
     assert all(r["crawl_delay"] == 7 for r in rows)
 
-    con = duckdb.connect()
-    got = con.execute(
-        f"""SELECT regexp_extract_all(b, '{ALLOW_RE}', 1),
-                   regexp_extract_all(b, '{DISALLOW_RE}', 1),
-                   regexp_extract_all(b, '{DELAY_RE}', 1),
-                   regexp_extract_all(b, '{SITEMAP_RE}', 1)
-            FROM (SELECT ? AS b)""", [body]).fetchone()
-    assert got[0] == ["/lower"]
-    assert sorted(got[1]) == ["/canonical", "/padded", "/upper"]
-    assert got[2] == ["7"]
-    assert got[3] == ["https://h.example/s.xml"]
+    want = (["/lower"], ["/canonical", "/padded", "/upper"], ["7"],
+            ["https://h.example/s.xml"])
+    patterns = (R.ALLOW_RE, R.DISALLOW_RE, R.DELAY_RE, R.SITEMAP_RE)
+    got = pages.select(*[F.regexp_extract_all(R._body(), F.lit(p), 1)
+                         for p in patterns]).first()
+    assert tuple(sorted(g) for g in got) == want
+
+    path = str(tmp_path / "robots.parquet")
+    pq.write_table(pa.Table.from_pylist([row]), path)
+    cte = R._BODIES_CTE.replace("__PAGES_PARQUET__", path)
+    extracts = ", ".join(f"regexp_extract_all(body, '{p}', 1)"
+                         for p in patterns)
+    got = duckdb.connect().execute(
+        f"WITH {cte} SELECT {extracts} FROM bodies").fetchone()
+    assert tuple(sorted(g) for g in got) == want
