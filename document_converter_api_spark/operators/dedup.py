@@ -38,11 +38,12 @@ spec; tests/test_operators.py compares them per doc_id, planted non-ASCII
 rows included. All three stages tokenize with :func:`_words`, which
 lowercases the way DuckDB's ``lower`` does: Python's ``str.lower`` maps a
 word-final Σ to ς and İ to i + U+0307, DuckDB maps them to σ and i, so
-those two are translated first. Out of scope, and not covered by the
+those two are translated first. ``q_span_dedup`` translates them the same
+way before Catalyst's ``F.lower``, which maps them as Python does. Out of
+scope, and not covered by the
 oracle gate: 43 single code points whose lowercase differs because the
 engines ship different Unicode versions (Python's UCD 14.0 vs DuckDB
-1.0.0; e.g. U+2C2F, U+10570), and Catalyst's ``F.lower`` (``q_span_dedup``
-here), which has Java's word-final-sigma behaviour.
+1.0.0; e.g. U+2C2F, U+10570).
 """
 
 from __future__ import annotations
@@ -958,7 +959,8 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _corpus(spark, sf_dir)
     k = SPAN_K
     sh = (widen(corpus)
-          .withColumn("words", F.split(F.lower("text"), " ", -1))
+          .withColumn("words", F.split(
+              F.lower(F.translate("text", "Σİ", "σi")), " ", -1))
           .filter(F.size("words") >= k)
           .select("doc_id", F.size("words").alias("n_words"),
                   F.posexplode(F.transform(

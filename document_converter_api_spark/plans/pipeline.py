@@ -87,28 +87,35 @@ def _prepartitioned_p(input_path: str) -> int | None:
         return None
 
 
-def partition_metrics(results: DataFrame) -> DataFrame:
+def partition_metrics(rows: DataFrame) -> DataFrame:
     """A6 per-partition lineage aggregates (SURVEY.md §2.4): single hash
     aggregate, map-side partials free from Catalyst.
 
-    Besides the flat ``failure_count``, one ``<class>_count`` column per
-    degraded error class of ``extraction/core.COUNTED_ERRORS`` (today
+    ``rows`` is a commit group's extracted results unioned by name with its
+    gate rejects (:func:`run_extraction_job`); reject rows carry no
+    ``bytes_out``. So ``doc_count`` counts extracted rows only, while
+    ``bytes_in`` and ``failure_count`` include the gate rejects, and
+    ``failure_urls`` holds up to 20 failing urls from either side, in no
+    order. Besides the flat ``failure_count``, one ``<class>_count`` column
+    per degraded error class of ``extraction/core.COUNTED_ERRORS`` (today
     ``needs_ocr_count``, ``encrypted_count``, ``timeout_count``): image-only
     PDFs the sandbox cannot OCR, files whose password the handler cannot
     derive, and documents that blew the per-doc wall-clock budget
     (operators/extract.DOC_TIME_BUDGET_S). At 100 TB these columns are how
     an operator quantifies the text the run *knowingly* left behind (the
     reference recovers the first via tesseract). Every column lands in the
-    partition's lineage row (:func:`run_extraction_job`)."""
-    return results.groupBy("partition_id").agg(
-        F.count("*").alias("doc_count"),
-        F.sum("bytes_in").alias("bytes_in"),
-        F.sum("bytes_out").alias("bytes_out"),
+    partition's lineage row."""
+    return rows.groupBy("partition_id").agg(
+        F.count("bytes_out").alias("doc_count"),
+        F.coalesce(F.sum("bytes_in"), F.lit(0)).alias("bytes_in"),
+        F.coalesce(F.sum("bytes_out"), F.lit(0)).alias("bytes_out"),
         F.count("error").alias("failure_count"),
         *(F.count_if(F.col("error") == tag).alias(f"{tag}_count")
           for tag in COUNTED_ERRORS),
-        F.slice(F.filter(F.collect_list(F.when(F.col("error").isNotNull(), F.col("url"))),
-                         lambda u: u.isNotNull()), 1, 20).alias("failure_urls"),
+        # collect_list skips the NULLs of non-failing rows
+        F.slice(F.collect_list(F.when(F.col("error").isNotNull(),
+                                      F.col("url"))), 1, 20)
+        .alias("failure_urls"),
     )
 
 
@@ -193,32 +200,21 @@ def run_extraction_job(
         lineage.merge({p: {"status": "processing", "started_at": now}
                        for p in group})
 
-        gset = set(group)
         sub_valid = valid.filter(F.col("partition_id").isin(group))
         sub_rejects = rejects.filter(F.col("partition_id").isin(group))
 
         results = run_extract(sub_valid, shuffle_partitions=shuffle_partitions)
-        key = f"g{min(gset):05d}"
-        results_table.replace_group(results, key)          # data first …
-        rejects_table.replace_group(sub_rejects, key)
+        key = f"g{min(group):05d}"
+        written = results_table.replace_group(results, key)   # data first …
+        rej_written = rejects_table.replace_group(sub_rejects, key)
 
         # metrics from the *written* files (no recompute of the UDF stage)
-        written = spark.read.parquet(
-            os.path.join(results_table.root, "data",
-                         results_table.commits()[key]))
-        rej_written = spark.read.parquet(
-            os.path.join(rejects_table.root, "data",
-                         rejects_table.commits()[key]))
-        per_partition = partition_metrics(written)
+        per_partition = partition_metrics(
+            written.unionByName(rej_written, allowMissingColumns=True))
         empty = {f.name: [] if isinstance(f.dataType, ArrayType) else 0
                  for f in per_partition.schema}
         mrows = {r["partition_id"]: r.asDict()
                  for r in per_partition.collect()}
-        rej_counts = {r["partition_id"]: (r["n"], r["b"], r["urls"]) for r in
-                      rej_written.groupBy("partition_id")
-                      .agg(F.count("*").alias("n"), F.sum("bytes_in").alias("b"),
-                           F.slice(F.collect_list("url"), 1, 20).alias("urls"))
-                      .collect()}
         done_ts = time.time()
         if webhook_table is not None:
             from ..sources.webhook import deliver_webhooks
@@ -227,23 +223,13 @@ def run_extraction_job(
                     "completed_at",
                     F.timestamp_seconds(F.lit(done_ts))),
                 webhook_url)
-            webhook_table.replace_group(log, key)
-            undeliv = (spark.read.parquet(
-                os.path.join(webhook_table.root, "data",
-                             webhook_table.commits()[key]))
-                .filter(~F.col("delivered")).count())
+            undeliv = (webhook_table.replace_group(log, key)
+                       .filter(~F.col("delivered")).count())
             stats["webhooks_failed"] = stats.get("webhooks_failed", 0) + undeliv
         merged_rows = {}
         for p in group:
-            # every partition_metrics column, plus the gate rejects
-            m = mrows.get(p, empty)
-            rn, rb, rurls = rej_counts.get(p, (0, 0, []))
-            row = {**m,
-                   "status": "completed",
-                   "bytes_in": m["bytes_in"] + (rb or 0),
-                   "failure_count": m["failure_count"] + rn,
-                   "failure_urls": (m["failure_urls"] + rurls)[:20],
-                   "completed_at": done_ts}
+            row = {**mrows.get(p, empty),
+                   "status": "completed", "completed_at": done_ts}
             del row["partition_id"]
             merged_rows[p] = row
             stats["docs"] += row["doc_count"]

@@ -6,11 +6,12 @@ needs on a real cluster — swap :class:`ManifestTable` for a real Iceberg
 catalog (``df.writeTo(...).append()`` / ``MERGE INTO``) and nothing upstream
 changes:
 
-* **append**: write a new parquet directory, then atomically publish it in
-  ``manifest.json`` (``os.replace`` — atomic per POSIX on one filesystem;
-  SURVEY.md §7.4.6). Data written but not yet in the manifest is invisible —
-  a killed run never exposes partial output.
-* **replace_group / delete_where**: snapshot-rewrite equivalents.
+* **replace_group**: write a new parquet directory, then atomically publish
+  it under its commit key in ``manifest.json`` (``os.replace`` — atomic per
+  POSIX on one filesystem; SURVEY.md §7.4.6), replacing that key's previous
+  commit. Data written but not yet in the manifest is invisible — a killed
+  run never exposes partial output.
+* **delete_where**: the snapshot-rewrite equivalent of ``DELETE WHERE``.
 * **LineageStore.merge**: the MERGE-INTO-keyed-on-partition_id upsert that
   backs partition-granular checkpointing (north rule — the reference keeps
   job state in an in-memory dict, /root/reference/app/main.py:97, and loses
@@ -57,17 +58,7 @@ class ManifestTable:
         if not os.path.exists(self.manifest_path):
             return {"snapshot_id": 0, "commits": {}, "snapshots": []}
         with open(self.manifest_path, encoding="utf-8") as f:
-            man = json.load(f)
-        if "snapshots" not in man:
-            # manifest written before time travel: seed the log with the
-            # CURRENT state so read(as_of=<live id>) resolves instead of
-            # claiming the published table never existed
-            man["snapshots"] = [] if not man["commits"] else [{
-                "id": man["snapshot_id"],
-                "ts": man.get("committed_at", 0.0),
-                "commits": dict(man["commits"]),
-            }]
-        return man
+            return json.load(f)
 
     def _publish(self, man: dict) -> None:
         """Bump the snapshot id, log the new snapshot's commits map (the
@@ -87,21 +78,18 @@ class ManifestTable:
         """commit_key -> data subdirectory (published commits only)."""
         return dict(self._load()["commits"])
 
-    def append(self, df: DataFrame, commit_key: str | None = None) -> str:
-        """Write ``df`` as a new commit and publish it atomically."""
-        key = commit_key or uuid.uuid4().hex
-        subdir = f"commit-{key}-{uuid.uuid4().hex[:8]}"
+    def replace_group(self, df: DataFrame, commit_key: str) -> DataFrame:
+        """Write ``df`` as the commit for ``commit_key``, publish it
+        atomically (replacing the key's previous commit: a re-run of a
+        partition group after a kill between data write and lineage merge
+        is idempotent), and return the published data read back."""
+        subdir = f"commit-{commit_key}-{uuid.uuid4().hex[:8]}"
         out = os.path.join(self.root, "data", subdir)
         df.write.mode("overwrite").parquet(out)
         man = self._load()
-        man["commits"][key] = subdir
+        man["commits"][commit_key] = subdir
         self._publish(man)
-        return key
-
-    def replace_group(self, df: DataFrame, commit_key: str) -> None:
-        """Overwrite the commit for ``commit_key`` (idempotent re-run of a
-        partition group after a kill between data write and lineage merge)."""
-        self.append(df, commit_key)
+        return df.sparkSession.read.parquet(out)
 
     def read(self, spark: SparkSession,
              as_of_snapshot: int | None = None) -> DataFrame:

@@ -15,7 +15,6 @@ to the batch pipeline over the same files.
 
 from __future__ import annotations
 
-import inspect
 import os
 import shutil
 
@@ -47,11 +46,10 @@ def drain_available_now(stream_df: DataFrame, output_dir: str,
     sessionize, and url-dedup wrappers — one place for the orchestration
     and failure semantics).
 
-    ``batch_outputs(batch_df) -> dict[subdir, DataFrame]`` maps each
-    micro-batch to its output tables; a two-parameter callback
-    ``batch_outputs(batch_df, batch_id)`` also receives the epoch id —
-    REQUIRED for stateful folds whose merge is not idempotent (see
-    :func:`latest_state`). Writes are **idempotent under micro-batch
+    ``batch_outputs(batch_df, batch_id) -> dict[subdir, DataFrame]`` maps
+    each micro-batch to its output tables; the epoch id is what stateful
+    folds whose merge is not idempotent need (see :func:`latest_state`),
+    and other callbacks ignore it. Writes are **idempotent under micro-batch
     replay** (foreachBatch is at-least-once): every epoch owns its
     ``subdir/batch_id=N`` partition directory and overwrites it
     wholesale if the epoch replays after a crash — readers see the
@@ -99,23 +97,6 @@ def drain_available_now(stream_df: DataFrame, output_dir: str,
                 "legacy files into a batch_id=-1/ subdir (or point "
                 "output_dir at a fresh directory) before draining.")
 
-    # Pass batch_id iff the callback can take it AND plausibly means to:
-    # a second REQUIRED positional, a second positional literally named
-    # batch_id (even defaulted — a fold unit-tested with batch_id=0 must
-    # still receive real epoch ids, or it reads before_batch=0 forever
-    # and silently drops all history), or *args. A defaulted second
-    # param with an unrelated name (subdir='results') does NOT get the
-    # epoch id bound into it.
-    _ps = list(inspect.signature(batch_outputs).parameters.values())
-    _pos = [p for p in _ps if p.kind in (
-        inspect.Parameter.POSITIONAL_ONLY,
-        inspect.Parameter.POSITIONAL_OR_KEYWORD)]
-    wants_batch_id = (
-        any(p.kind == inspect.Parameter.VAR_POSITIONAL for p in _ps)
-        or (len(_pos) >= 2
-            and (_pos[1].default is inspect.Parameter.empty
-                 or _pos[1].name == "batch_id")))
-
     def _prune_old_epochs(subdir: str, committed_batch_id: int) -> None:
         cutoff = committed_batch_id - (keep_state_epochs - 1)
         d = os.path.join(output_dir, subdir)
@@ -134,9 +115,7 @@ def drain_available_now(stream_df: DataFrame, output_dir: str,
                 shutil.rmtree(os.path.join(d, e), ignore_errors=True)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        outs = (batch_outputs(batch_df, batch_id) if wants_batch_id
-                else batch_outputs(batch_df))
-        for subdir, df in outs.items():
+        for subdir, df in batch_outputs(batch_df, batch_id).items():
             _reject_legacy_flat_layout(subdir)
             (df.write.mode("overwrite")
              .parquet(os.path.join(output_dir, subdir,
@@ -202,7 +181,7 @@ def run_available_now(spark: SparkSession, input_dir: str, output_dir: str,
     stage; returns number of micro-batches processed. Re-invoking after new
     files land processes only the new files (streaming file-source log)."""
 
-    def outputs(batch_df: DataFrame) -> dict[str, DataFrame]:
+    def outputs(batch_df: DataFrame, _batch_id: int) -> dict[str, DataFrame]:
         kwargs = {"max_bytes": max_bytes} if max_bytes else {}
         results, rejects = extract_pipeline(batch_df, num_partitions=16,
                                             shuffle_partitions=16, **kwargs)

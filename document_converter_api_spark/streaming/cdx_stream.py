@@ -47,7 +47,7 @@ def run_cdx_available_now(spark: SparkSession, input_dir: str,
     checkpoint and indexes only the new files."""
     from ..operators.cdx import cdx_records
 
-    def outputs(batch_df: DataFrame) -> dict[str, DataFrame]:
+    def outputs(batch_df: DataFrame, _batch_id: int) -> dict[str, DataFrame]:
         return {"records": cdx_records(
             batch_df.select("url", "warc_ts", "html"))}
 

@@ -49,6 +49,6 @@ def run_dedup_available_now(spark: SparkSession, input_dir: str,
               .parquet(input_dir))
     return drain_available_now(
         dedup_urls(stream, horizon), output_dir,
-        lambda batch_df: {"deduped": batch_df},
+        lambda batch_df, _batch_id: {"deduped": batch_df},
         checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
         label="url-dedup drain")

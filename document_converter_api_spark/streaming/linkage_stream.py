@@ -56,7 +56,7 @@ def run_linkage_available_now(spark: SparkSession, input_dir: str,
     cut = DEFAULT_MIN_AGREE if min_agree is None else min_agree
     index = build_history_index(spark, history_df)
 
-    def outputs(batch_df: DataFrame) -> dict[str, DataFrame]:
+    def outputs(batch_df: DataFrame, _batch_id: int) -> dict[str, DataFrame]:
         return {"verdicts": link_crawl(
             spark, None, batch_df.select("doc_id", "text"),
             min_agree=cut, index=index)}

@@ -239,6 +239,6 @@ def run_sessionize_available_now(spark: SparkSession, input_dir: str,
     stream = spark.readStream.schema(schema).parquet(input_dir)
     return drain_available_now(
         sessionize_stream(stream, gap_ms), output_dir,
-        lambda batch_df: {"sessions": batch_df},
+        lambda batch_df, _batch_id: {"sessions": batch_df},
         checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
         label="sessionize drain")

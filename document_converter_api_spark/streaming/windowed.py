@@ -86,6 +86,6 @@ def run_crawl_rate_available_now(spark: SparkSession, input_dir: str,
                     .withWatermark("warc_ts", watermark))
     return drain_available_now(
         crawl_rate(stream_pages, window), output_dir,
-        lambda batch_df: {"crawl_rate": batch_df},
+        lambda batch_df, _batch_id: {"crawl_rate": batch_df},
         checkpoint_dir=checkpoint_dir, output_mode="update",
         timeout_sec=timeout_sec, label="crawl-rate drain")

@@ -1196,22 +1196,45 @@ class TestSpanDedupTwoPhase:
         # partial aggregation before the h-shuffle (map-side combine)
         assert "partial_count" in plan or "HashAggregate" in plan, plan
 
+    # uppercase Greek (word-final Σ) and Turkish (İ) documents, each with
+    # its twin lowercased as DuckDB's lower does: Σ -> σ, İ -> i
+    CASE_TWINS = [
+        (401, "ΟΔΟΣ ΤΗΣ ΠΟΛΗΣ ΚΑΙ Η ΟΔΟΣ ΤΟΥ ΝΟΜΟΥ"),
+        (402, "οδοσ τησ πολησ και η οδοσ του νομου"),
+        (403, "İSTANBUL İLİ VE İZMİR İLİ VE İSPARTA İLİ"),
+        (404, "istanbul ili ve izmir ili ve isparta ili"),
+    ]
+
     def test_hot_span_marked_correctly(self, spark, tmp_path):
         """Skew fixture: one 8-word span planted in 200 docs (plus unique
         filler) — the corpus-ubiquitous-boilerplate shape. Every planted
         doc must report exactly the K duplicated words; a control doc
-        with unique text reports none (absent from output)."""
+        with unique text reports none (absent from output). The case
+        twins are whole-doc duplicates once lowercased, and the Spark
+        result equals the DuckDB oracle row for row."""
+        import duckdb
+
         from document_converter_api_spark.operators.dedup import (
-            SPAN_K, q_span_dedup,
+            DEDUP_ORACLES, SPAN_K, q_span_dedup,
         )
         hot = " ".join(f"w{j}" for j in range(SPAN_K))
         rows = [(i, f"{hot} u{i}a u{i}b u{i}c u{i}d u{i}e u{i}f u{i}g u{i}h")
                 for i in range(1, 201)]
         rows.append((999, " ".join(f"solo{j}" for j in range(SPAN_K * 2))))
+        rows += self.CASE_TWINS
         df = spark.createDataFrame(rows, "doc_id long, text string")
         df.write.parquet(str(tmp_path / "documents.parquet"))
         out = {r.doc_id: r for r in
                q_span_dedup(spark, str(tmp_path)).collect()}
+        con = duckdb.connect()
+        con.execute("CREATE VIEW documents AS SELECT * FROM "
+                    f"'{tmp_path}/documents.parquet/*.parquet'")
+        want = {r[0]: r for r in
+                con.execute(DEDUP_ORACLES["span_dedup"]).fetchall()}
+        con.close()
+        assert {d: tuple(r) for d, r in out.items()} == want
+        for d, _ in self.CASE_TWINS:
+            assert out[d].dup_words == out[d].n_words == SPAN_K, out.get(d)
         assert 999 not in out
         # docs NOT divisible by 5 or 7 mark exactly the hot K-word span
         for i in (1, 2, 3, 199):

@@ -87,6 +87,45 @@ def test_kill_then_resume_processes_only_pending(spark, smoke_paths, outdir):
                                          for tag in COUNTED_ERRORS)
                for r in rows.values())
 
+    # every lineage row equals a recomputation from the published tables
+    res = results.select("partition_id", "url", "error", "bytes_in",
+                         "bytes_out").collect()
+    rej = (ManifestTable(os.path.join(outdir, "rejects")).read(spark)
+           .select("partition_id", "url", "error", "bytes_in").collect())
+    for p, row in rows.items():
+        p_res = [r for r in res if r.partition_id == p]
+        p_all = p_res + [r for r in rej if r.partition_id == p]
+        failing = [r.url for r in p_all if r.error is not None]
+        assert row["doc_count"] == len(p_res), p
+        assert row["bytes_out"] == sum(r.bytes_out for r in p_res), p
+        assert row["bytes_in"] == sum(r.bytes_in or 0 for r in p_all), p
+        assert row["failure_count"] == len(failing), p
+        for tag in COUNTED_ERRORS:
+            assert row[f"{tag}_count"] == sum(
+                r.error == tag for r in p_all), (p, tag)
+        assert set(row["failure_urls"]) <= set(failing), p
+        assert len(row["failure_urls"]) == min(20, len(failing)), p
+
+
+def test_reject_only_partition_lineage(spark, tmp_path):
+    """A partition whose only page is a gate reject still gets a full
+    lineage row: no extracted docs, zero (not NULL) output bytes, one
+    failure."""
+    pages = str(tmp_path / "pages.parquet")
+    url, html = "https://a.example/robots.txt", b"User-agent: *\nDisallow: /x\n"
+    spark.createDataFrame([(url, html, "en")],
+                          "url string, html binary, lang string"
+                          ).write.parquet(pages)
+    out = str(tmp_path / "out")
+    stats = run_extraction_job(spark, pages, out, num_partitions=1,
+                               partitions_per_commit=1)
+    row = LineageStore(os.path.join(out, "_lineage", "lineage.json")).load()[0]
+    assert (row["doc_count"], row["bytes_out"], row["failure_count"]) == (
+        0, 0, 1)
+    assert row["bytes_in"] == len(html)
+    assert row["failure_urls"] == [url]
+    assert (stats["docs"], stats["failures"], stats["bytes_out"]) == (0, 1, 0)
+
 
 def _oversize_count(gold_table) -> int:
     # goldens extracted oversize rows (no size gate there); the pipeline

@@ -168,43 +168,6 @@ class TestStreamingFrequency:
         assert replayed == committed
 
 
-def test_drain_callback_batch_id_classification():
-    """Pin which callback shapes receive the epoch id: two required
-    positionals, a defaulted second param NAMED batch_id (a fold
-    unit-tested with batch_id=0 must still get real epoch ids), and
-    *args — but NOT a defaulted second param with an unrelated name
-    (the epoch id must never be bound into subdir='results')."""
-    import inspect
-
-    from document_converter_api_spark.streaming import availablenow as AN
-
-    def classify(cb):
-        ps = list(inspect.signature(cb).parameters.values())
-        pos = [p for p in ps if p.kind in (
-            inspect.Parameter.POSITIONAL_ONLY,
-            inspect.Parameter.POSITIONAL_OR_KEYWORD)]
-        return (any(p.kind == inspect.Parameter.VAR_POSITIONAL for p in ps)
-                or (len(pos) >= 2
-                    and (pos[1].default is inspect.Parameter.empty
-                         or pos[1].name == "batch_id")))
-
-    # the classifier above mirrors drain_available_now's rule; assert the
-    # shapes, then assert the production module agrees on the live fold
-    assert classify(lambda df, batch_id: None) is True
-    assert classify(lambda df, batch_id=0: None) is True
-    assert classify(lambda df, *args: None) is True
-    assert classify(lambda df: None) is False
-
-    def legacy(df, subdir="results"):
-        return {}
-    assert classify(legacy) is False
-
-    # source-of-truth check: the rule in availablenow.py literally
-    # contains the batch_id-name and VAR_POSITIONAL clauses
-    src = inspect.getsource(AN.drain_available_now)
-    assert "VAR_POSITIONAL" in src and '"batch_id"' in src
-
-
 class TestStateEpochPruning:
     """A long-running monitor writes one COMPLETE merged sketch per
     micro-batch; without pruning the state dir grows one full copy per
@@ -278,7 +241,8 @@ class TestStateEpochPruning:
             str(tmp_path / "in"))
         with pytest.raises(ValueError, match="keep_state_epochs"):
             drain_available_now(stream, str(tmp_path / "out"),
-                                lambda df: {}, keep_state_epochs=1)
+                                lambda df, batch_id: {},
+                                keep_state_epochs=1)
 
 
 class TestStreamingLinkage:

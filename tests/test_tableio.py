@@ -1,4 +1,4 @@
-"""ManifestTable semantics: append/replace commits, S7 retention delete
+"""ManifestTable semantics: keyed replace commits, S7 retention delete
 (snapshot rewrite), atomic manifest state.
 
 S7 maps the reference's temp-file retention sweep
@@ -53,8 +53,11 @@ def test_replace_group_is_idempotent(spark, tmp_path):
     t = ManifestTable(str(tmp_path / "tbl3"))
     df = spark.createDataFrame([Row(url="a", n=1), Row(url="b", n=2)])
     t.replace_group(df, "g0")
-    t.replace_group(df, "g0")  # rerun of the same commit group (resume path)
+    # rerun of the same commit group (resume path); the returned frame is
+    # the published commit read back
+    published = t.replace_group(df, "g0")
     assert t.read(spark).count() == 2
+    assert sorted(published.collect()) == sorted(df.collect())
 
 
 def test_expire_snapshots_reclaims_orphaned_dirs(spark, tmp_path):
@@ -141,9 +144,11 @@ class TestTimeTravel:
             ManifestTable,
         )
         t = ManifestTable(str(tmp_path / "tt"))
-        t.append(spark.createDataFrame([("a", 1)], "url string, v int"))
+        t.replace_group(spark.createDataFrame([("a", 1)], "url string, v int"),
+                        "g0")
         s1 = t.snapshots()[-1]["id"]
-        t.append(spark.createDataFrame([("b", 2)], "url string, v int"))
+        t.replace_group(spark.createDataFrame([("b", 2)], "url string, v int"),
+                        "g1")
         s2 = t.snapshots()[-1]["id"]
         t.delete_where(spark, "url = 'a'")
         s3 = t.snapshots()[-1]["id"]
@@ -163,10 +168,12 @@ class TestTimeTravel:
             ManifestTable,
         )
         t = ManifestTable(str(tmp_path / "tt2"))
-        t.append(spark.createDataFrame([("a", 1)], "url string, v int"))
+        t.replace_group(spark.createDataFrame([("a", 1)], "url string, v int"),
+                        "g0")
         s1 = t.snapshots()[-1]["id"]
         t.delete_where(spark, "url = 'a'")   # rewrite orphans s1's dir
-        t.append(spark.createDataFrame([("c", 3)], "url string, v int"))
+        t.replace_group(spark.createDataFrame([("c", 3)], "url string, v int"),
+                        "g1")
         s3 = t.snapshots()[-1]["id"]
 
         removed = t.expire_snapshots(keep_last=2)
@@ -176,25 +183,3 @@ class TestTimeTravel:
         # retained horizon still time-travels; live read unaffected
         assert t.read(spark, as_of_snapshot=s3) is not None
         assert {r.url for r in t.read(spark).collect()} == {"c"}
-
-    def test_pre_timetravel_manifest_resolves_live_snapshot(self, spark,
-                                                            tmp_path):
-        """A manifest written before the snapshot log existed must still
-        resolve read(as_of=<live id>): _load seeds the log with the
-        current published state instead of claiming it never existed."""
-        import json
-        import os as _os
-        from document_converter_api_spark.sources.tableio import (
-            ManifestTable,
-        )
-        t = ManifestTable(str(tmp_path / "legacy"))
-        t.append(spark.createDataFrame([("a", 1)], "url string, v int"))
-        # strip the snapshot log, simulating the legacy format
-        man = json.load(open(t.manifest_path))
-        live_id = man["snapshot_id"]
-        del man["snapshots"]
-        json.dump(man, open(t.manifest_path, "w"))
-        t2 = ManifestTable(str(tmp_path / "legacy"))
-        assert [s["id"] for s in t2.snapshots()] == [live_id]
-        assert {r.url for r in
-                t2.read(spark, as_of_snapshot=live_id).collect()} == {"a"}

@@ -6,8 +6,7 @@ The 100 TB story is only credible if the plans show it (SURVEY.md §4):
 * **WholeStageCodegen** spans over the F-layer expression chains;
 * **BroadcastHashJoin** for dim joins / point lookups, SortMergeJoin only
   where both sides are big;
-* a single Exchange ahead of the Arrow extraction stage (salted url-hash),
-  and no Exchange at all in the no-pre-shuffle variant;
+* a single Exchange ahead of the Arrow extraction stage (salted url-hash);
 * **TakeOrderedAndProject** for sort+limit (no total sort).
 
 Run: ``python tools/explain_plans.py`` (writes PLANS.md at the repo root).
