@@ -10,10 +10,14 @@ same poison document again. So we enforce ours for real, cooperatively:
 
 * :func:`extract_document` arms a deadline before dispatch and disarms
   it in ``finally``;
-* the parser hot loops (HTML tokenizer, PDF stream scanner) call
-  :func:`check` every ``_STRIDE`` iterations — a counter decrement per
-  iteration, one ``time.monotonic()`` per stride, unmeasurable at bench
-  scale;
+* the parser hot loops (HTML tokenizer, PDF object and content-stream
+  scanners) call :func:`check` every ``_STRIDE`` iterations — a counter
+  decrement per iteration, one ``time.monotonic()`` per stride,
+  unmeasurable at bench scale;
+* coarser phases call :func:`check_now`: each PDF page, each flate
+  stream after it inflates, and the DOCX reader after inflating
+  ``word/document.xml``, after parsing it and every ``_CHECK_EVERY``
+  body children;
 * a blown budget raises :class:`DocTimeBudgetError`, which the U1
   dispatch catches and tags as ``error='timeout'`` — a per-doc failure
   row like ``needs_ocr``/``encrypted``, never a task failure.
@@ -21,9 +25,11 @@ same poison document again. So we enforce ours for real, cooperatively:
 Cooperative (not SIGALRM / not a watchdog thread) on purpose: Spark
 Python workers handle many documents per process, signals interact
 badly with the worker's own alarm usage and only fire on the main
-thread, and a watchdog cannot actually stop a stuck C call — whereas
-every loop in this extractor is pure Python, so bytecode-level checks
-are both sufficient and portable.
+thread, and a watchdog cannot actually stop a stuck C call either. The
+checks bound the Python loops above. A single C call still runs to its
+end before the next check sees the overrun: one ``zlib`` inflate (capped
+at 64 MB of output), one ``ElementTree`` parse of a DOCX part, or one
+regex search over a PDF body.
 
 Module-level state is safe here: one document is extracted at a time
 per worker process (the Arrow batch loop is sequential), and
@@ -75,7 +81,7 @@ def check() -> None:
 
 def check_now() -> None:
     """Non-strided check, for coarse phase boundaries (between PDF
-    pages, before boilerplate classification) where the loop body is
-    already expensive."""
+    pages, after a flate inflate, between DOCX phases) where the step
+    before it is already expensive."""
     if _deadline is not None and time.monotonic() > _deadline:
         raise DocTimeBudgetError

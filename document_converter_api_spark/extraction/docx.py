@@ -22,6 +22,8 @@ import re
 import zipfile
 import xml.etree.ElementTree as ET
 
+from .deadline import check_now as _check_deadline_now
+
 _W = "{http://schemas.openxmlformats.org/wordprocessingml/2006/main}"
 _R = "{http://schemas.openxmlformats.org/officeDocument/2006/relationships}"
 _RELS = "{http://schemas.openxmlformats.org/package/2006/relationships}"
@@ -204,15 +206,21 @@ def _table_block(tbl: ET.Element, rels: dict[str, str]) -> str | None:
 # worker memory (oversize → error row via the extract_document wrapper).
 MAX_MEMBER_BYTES = 64 * 1024 * 1024
 
+# Body children between deadline checks: one paragraph or table costs
+# microseconds to milliseconds, so a clock read per 64 is unmeasurable.
+_CHECK_EVERY = 64
+
 
 def docx_to_markdown(data: bytes) -> str:
     with zipfile.ZipFile(io.BytesIO(data)) as zf:
         if zf.getinfo("word/document.xml").file_size > MAX_MEMBER_BYTES:
             raise ValueError("docx member exceeds decompression cap")
         xml_bytes = zf.read("word/document.xml")
+        _check_deadline_now()  # after inflating the main part
         rels = _load_rels(zf)
         numbering = _load_numbering(zf)
     root = ET.fromstring(xml_bytes)
+    _check_deadline_now()  # after the one C-level parse
     body = root.find(f"{_W}body")
     if body is None:
         return ""
@@ -227,7 +235,9 @@ def docx_to_markdown(data: bytes) -> str:
 
     # walk body children in document order — iter() would flatten table-cell
     # paragraphs out of their tables and emit them twice
-    for child in body:
+    for i, child in enumerate(body):
+        if i % _CHECK_EVERY == 0:
+            _check_deadline_now()
         if child.tag == f"{_W}p":
             item = _para_block(child, rels, numbering, counters)
         elif child.tag == f"{_W}tbl":

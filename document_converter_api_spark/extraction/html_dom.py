@@ -124,7 +124,7 @@ _EMPTY_ATTRS: dict = {}  # shared read-only default — attrs are never mutated
 class Node:
     """DOM node: element (``tag`` set) or text (``tag is None``)."""
 
-    __slots__ = ("tag", "attrs", "children", "text", "parent", "sup")
+    __slots__ = ("tag", "attrs", "children", "text", "sup")
 
     def __init__(self, tag: str | None, attrs: dict[str, str] | None = None,
                  text: str = "") -> None:
@@ -132,16 +132,11 @@ class Node:
         self.attrs = attrs if attrs is not None else _EMPTY_ATTRS
         self.children: list[Node] = []
         self.text = text
-        self.parent: Node | None = None
         self.sup = False  # builder-only: inside a suppressed subtree
 
     @property
     def is_text(self) -> bool:
         return self.tag is None
-
-    def append(self, child: "Node") -> None:
-        child.parent = self
-        self.children.append(child)
 
     def attr(self, name: str) -> str:
         # `or ""` also maps valueless attributes (parser yields None) — lets
@@ -229,7 +224,6 @@ class _DomBuilder(HTMLParser):
         else:
             node = Node(None)
             node.text = list(buf)  # type: ignore[assignment]
-            node.parent = self.stack[-1]
             children.append(node)
             self._listy.append(node)
         buf.clear()
@@ -278,7 +272,6 @@ class _DomBuilder(HTMLParser):
             # suppressed subtree: keep stack discipline, never attach
             node.sup = True
         else:
-            node.parent = top
             top.children.append(node)
         # Suppressed nodes always push (their subtree is detached, so the
         # serializer never recurses into it; the sup flag must stay on the
@@ -301,7 +294,7 @@ class _DomBuilder(HTMLParser):
                 self._deny_attrs is not None and attrs_dict
                 and self._deny_attrs(tag, attrs_dict)):
             return
-        top.append(Node(tag, attrs_dict))
+        top.children.append(Node(tag, attrs_dict))
 
     def handle_endtag(self, tag: str) -> None:
         self._flush_text()

@@ -329,6 +329,7 @@ def _inflate(params: bytes, body: bytes) -> bytes | None:
     try:
         d = zlib.decompressobj()
         out = d.decompress(body, MAX_STREAM_BYTES)
+        _check_deadline_now()  # one C call of up to MAX_STREAM_BYTES
         if d.unconsumed_tail or not d.eof:
             return None
         return out

@@ -8,6 +8,15 @@ post-format helpers against hand-computed expectations from
 
 from __future__ import annotations
 
+import gc
+import importlib
+import sys
+import zipfile
+import zipimport
+
+import pyarrow as pa
+import pytest
+
 from document_converter_api_spark.extraction.boilerplate import keep_block
 from document_converter_api_spark.extraction.core import extract_document
 from document_converter_api_spark.extraction.html_dom import parse_html
@@ -20,6 +29,10 @@ from document_converter_api_spark.extraction.postformat import (
     sanitize_filename,
 )
 from document_converter_api_spark.extraction.sniff import sniff_content_type
+from document_converter_api_spark.operators.extract import (
+    _drop_zip_finders,
+    extract_arrow_batches,
+)
 from fixtures.genpages import build_minimal_pdf
 
 
@@ -312,6 +325,25 @@ def test_comment_interleaved_text_is_linear_not_quadratic():
     assert res.error is None and res.markdown == "xy" * n
 
 
+def test_dom_is_freed_without_the_cycle_collector():
+    """A DOM holds no back-references, so dropping it frees every node by
+    reference counting alone and leaves nothing for the cyclic GC."""
+    page = _page("<nav><a href='/x'>x</a></nav><main><h1>Head</h1>"
+                 f"<p>{MAIN} <b>bold</b></p><ul><li>a<li>b</ul>"
+                 "<table><tr><td>1</td></tr></table></main>"
+                 "<script>var x = 1;</script>")
+    html_to_markdown(page)  # warm lazy module state outside the window
+    gc.collect()
+    gc.disable()
+    try:
+        root = parse_html(page)
+        del root
+        html_to_markdown(page)
+        assert gc.collect() == 0
+    finally:
+        gc.enable()
+
+
 def test_depth_cap_extracts_deep_pages_without_leaking_suppressed():
     """Elements beyond MAX_DEPTH flatten instead of nesting: a 50k-deep
     auto-generated page extracts its content (previously a captured
@@ -538,3 +570,55 @@ class TestCharsetDecoding:
             if any(ch in res.markdown for ch in "üáéíö"):
                 accented += 1
         assert accented == len(rows)
+
+
+def _zip_finder_paths() -> list[str]:
+    return [p for p, f in sys.path_importer_cache.items()
+            if isinstance(f, zipimport.zipimporter)]
+
+
+class TestZipFinderPruning:
+    """The extraction stage drops the cached zip-archive finders at the
+    head of every task, so the worker's per-task import-cache invalidation
+    has no archive directory to re-read; imports through the archive keep
+    working because the import system rebuilds the finder on demand."""
+
+    @pytest.fixture
+    def zip_on_path(self, tmp_path):
+        path = str(tmp_path / "zfp.zip")
+        with zipfile.ZipFile(path, "w") as zf:
+            zf.writestr("zfp_a.py", "VALUE = 'a'\n")
+            zf.writestr("zfp_b.py", "VALUE = 'b'\n")
+            zf.writestr("zfp_pkg/__init__.py", "")
+            zf.writestr("zfp_pkg/mod.py", "VALUE = 'pkg'\n")
+        sys.path.insert(0, path)
+        try:
+            assert importlib.import_module("zfp_a").VALUE == "a"
+            assert path in _zip_finder_paths()
+            yield path
+        finally:
+            sys.path.remove(path)
+            sys.path_importer_cache.pop(path, None)
+            for name in ("zfp_a", "zfp_b", "zfp_pkg", "zfp_pkg.mod"):
+                sys.modules.pop(name, None)
+
+    def test_drop_keeps_imports_through_the_archive_working(self,
+                                                            zip_on_path):
+        path_before = list(sys.path)
+        _drop_zip_finders()
+        assert _zip_finder_paths() == []
+        assert sys.path == path_before
+        assert "zfp_a" in sys.modules
+        assert importlib.import_module("zfp_b").VALUE == "b"
+        assert importlib.import_module("zfp_pkg.mod").VALUE == "pkg"
+
+    def test_each_task_starts_by_dropping_them(self, zip_on_path):
+        batch = pa.RecordBatch.from_pydict(
+            {"url": ["u.html"],
+             "html": [f"<html><body><main><p>{MAIN}</p></main></body></html>"
+                      .encode()],
+             "lang": ["en"], "content_type": ["html"],
+             "partition_id": pa.array([0], pa.int32())})
+        out = list(extract_arrow_batches(iter([batch])))
+        assert out[0].column("markdown").to_pylist() == [MAIN]
+        assert _zip_finder_paths() == []

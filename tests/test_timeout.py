@@ -7,7 +7,7 @@ tests pin the contract:
 
 * a doc whose parse exceeds the budget flows through as a tagged
   ``error='timeout'`` row — per-doc failure, never a raised exception or
-  a hung/killed task — on both the HTML and PDF paths;
+  a hung/killed task — on the HTML, PDF and DOCX paths;
 * the budget is per-document: a timeout disarms cleanly and the next doc
   extracts normally;
 * an unarmed or generous budget changes nothing byte-identical;
@@ -19,6 +19,9 @@ budget and vice versa), so the assertions are stable under any load.
 """
 
 from __future__ import annotations
+
+import io
+import zipfile
 
 import pytest
 
@@ -78,6 +81,29 @@ def test_pdf_timeout_is_tagged():
                           time_budget_s=300.0)
     assert ok.error is None
     assert "line 39999" in ok.markdown
+
+
+def test_docx_timeout_is_tagged():
+    # the DOCX reader has no hot loop; its phase checks (after inflating
+    # and parsing word/document.xml) must still see an expired budget
+    w = "http://schemas.openxmlformats.org/wordprocessingml/2006/main"
+    paras = "".join(f"<w:p><w:r><w:t>para {i}</w:t></w:r></w:p>"
+                    for i in range(200))
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        zf.writestr("[Content_Types].xml", "<Types/>")
+        zf.writestr("word/document.xml",
+                    f'<w:document xmlns:w="{w}"><w:body>{paras}'
+                    "</w:body></w:document>")
+    docx = buf.getvalue()
+    slow = extract_document(docx, "https://h.example/a.docx",
+                            time_budget_s=0.0)
+    assert slow.error == "timeout"
+    assert slow.markdown is None
+    ok = extract_document(docx, "https://h.example/a.docx",
+                          time_budget_s=300.0)
+    assert ok.error is None
+    assert "para 199" in ok.markdown
 
 
 def test_deadline_primitives():
