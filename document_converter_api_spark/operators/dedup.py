@@ -35,15 +35,9 @@ The shingle, MinHash and SimHash signatures have one Spark implementation
 each — an Arrow-batched Python stage — and the DuckDB SQL fragments
 (``_SHINGLES_SQL``, ``_minhash_sigs_sql``, ``_SIMHASH_SQL``) are their
 spec; tests/test_operators.py compares them per doc_id, planted non-ASCII
-rows included. All three stages tokenize with :func:`_words`, which
-lowercases the way DuckDB's ``lower`` does: Python's ``str.lower`` maps a
-word-final Σ to ς and İ to i + U+0307, DuckDB maps them to σ and i, so
-those two are translated first. ``q_span_dedup`` translates them the same
-way before Catalyst's ``F.lower``, which maps them as Python does. Out of
-scope, and not covered by the
-oracle gate: 43 single code points whose lowercase differs because the
-engines ship different Unicode versions (Python's UCD 14.0 vs DuckDB
-1.0.0; e.g. U+2C2F, U+10570).
+rows included. Every stage and query here lowercases and splits text with
+the shared tokenizer in ``functions/expressions.py``, whose docstring
+says how each engine's lowercase differs and what that leaves uncovered.
 """
 
 from __future__ import annotations
@@ -51,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.expressions import words, words_py, words_sql
 from .scan import widen
 
 N_MINHASH = 8
@@ -92,17 +87,6 @@ _CORPUS_SQL = """
 """
 
 
-# DuckDB's lower maps these two to σ and i; Python's maps a word-final Σ
-# to ς and İ to i + U+0307 (see the module docstring)
-_DUCKDB_CASE = str.maketrans({"Σ": "σ", "İ": "i"})
-
-
-def _words(text: str) -> list[str]:
-    """The signature stages' tokenizer, the Python side of
-    ``str_split(lower(text), ' ')``."""
-    return text.translate(_DUCKDB_CASE).lower().split(" ")
-
-
 def _shingle_set(words: list[str]) -> set[str]:
     """Distinct 3-word shingles; empty below 3 words."""
     return {words[i] + " " + words[i + 1] + " " + words[i + 2]
@@ -110,13 +94,11 @@ def _shingle_set(words: list[str]) -> set[str]:
 
 
 _SHINGLES_SQL = """
-    list_distinct(CASE WHEN len(str_split(lower(text), ' ')) >= 3 THEN
-      list_transform(range(1, len(str_split(lower(text), ' ')) - 1),
-        i -> str_split(lower(text), ' ')[i] || ' ' ||
-             str_split(lower(text), ' ')[i+1] || ' ' ||
-             str_split(lower(text), ' ')[i+2])
+    list_distinct(CASE WHEN len({w}) >= 3 THEN
+      list_transform(range(1, len({w}) - 1),
+        i -> {w}[i] || ' ' || {w}[i+1] || ' ' || {w}[i+2])
       ELSE [] END)
-"""
+""".format(w=words_sql("text"))
 
 
 # ---------------------------------------------------------------------------
@@ -153,7 +135,7 @@ def _shingle_rows_batches(it):
         for doc_id, text in zip(pdf["doc_id"].values, pdf["text"].values):
             if not isinstance(text, str):
                 continue
-            seen = _shingle_set(_words(text))
+            seen = _shingle_set(words_py(text))
             n = len(seen)
             ids.extend([doc_id] * n)
             ns.extend([n] * n)
@@ -229,7 +211,7 @@ def _minhash_sig_batches(it):
         for doc_id, text in zip(pdf["doc_id"].values, pdf["text"].values):
             if not isinstance(text, str):
                 continue
-            shingles = _shingle_set(_words(text))
+            shingles = _shingle_set(words_py(text))
             if not shingles:
                 continue
             mins = ["g" * 8] * N_MINHASH
@@ -459,7 +441,7 @@ def _simhash_batches(it):
                 out_sigs.append(0)
                 continue
             counts = np.zeros(SIMHASH_BITS, dtype=np.int64)
-            for t in _words(text):
+            for t in words_py(text):
                 v = memo.get(t)
                 if v is None:
                     v = memo[t] = token_votes(t)
@@ -559,7 +541,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # signed LongType exactly. NULL-text docs re-enter via LEFT JOIN at 0.
 _SIMHASH_SQL = """
     (WITH toks AS (
-       SELECT doc_id, unnest(str_split(lower(text), ' ')) AS t FROM corpus),
+       SELECT doc_id, unnest({words}) AS t FROM corpus),
      tn AS (
        SELECT doc_id,
               list_transform(range(1, 17),
@@ -574,6 +556,7 @@ _SIMHASH_SQL = """
      SELECT c.doc_id, COALESCE(s0.simhash, 0) AS simhash
      FROM corpus c LEFT JOIN s0 ON c.doc_id = s0.doc_id)
 """.format(
+    words=words_sql("text"),
     votes=", ".join(
         f"CAST(sum(CASE WHEN (nib[{b // 4 + 1}] >> {b % 4}) & 1 = 1 "
         f"THEN 1 ELSE -1 END) AS BIGINT) AS c{b}"
@@ -959,8 +942,7 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _corpus(spark, sf_dir)
     k = SPAN_K
     sh = (widen(corpus)
-          .withColumn("words", F.split(
-              F.lower(F.translate("text", "Σİ", "σi")), " ", -1))
+          .withColumn("words", words("text"))
           .filter(F.size("words") >= k)
           .select("doc_id", F.size("words").alias("n_words"),
                   F.posexplode(F.transform(
@@ -997,8 +979,8 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DEDUP_ORACLES["span_dedup"] = f"""
     WITH corpus AS ({_CORPUS_SQL}),
-    ws AS (SELECT doc_id, str_split(lower(text), ' ') AS w FROM corpus
-           WHERE len(str_split(lower(text), ' ')) >= {SPAN_K}),
+    ws AS (SELECT doc_id, {words_sql("text")} AS w FROM corpus
+           WHERE len({words_sql("text")}) >= {SPAN_K}),
     sh AS (SELECT doc_id, len(w) AS n_words,
                   unnest(list_transform(range(1, len(w) - {SPAN_K} + 2),
                     i -> {{'pos': i,

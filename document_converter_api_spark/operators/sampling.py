@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.expressions import words, words_sql
 from .scan import widen
 
 # ---------------------------------------------------------------------------
@@ -156,10 +157,10 @@ def _plant_topics(docs: DataFrame) -> DataFrame:
     n_sources and zero distinctiveness weight; the planted ``topic<k>``
     tokens are the ground-truth signal both engines must surface)."""
     snum = F.col("source").substr(4, 8)
-    return docs.withColumn("text", F.lower(F.concat(
+    return docs.withColumn("text", F.concat(
         F.col("text"),
         F.lit(" topic"), snum, F.lit(" topic"), snum,
-        F.lit(" niche"), (F.col("doc_id") % 7).cast("string"))))
+        F.lit(" niche"), (F.col("doc_id") % 7).cast("string")))
 
 
 def q_source_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -176,7 +177,7 @@ def q_source_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select("doc_id", "source", "text")))
     toks = (docs.select(
         "source",
-        F.explode(F.split(F.col("text"), " ")).alias("term"))
+        F.explode(words("text")).alias("term"))
         .filter((F.length("term") >= _MIN_TERM_LEN)
                 & F.col("term").rlike(_TERM_RE)))
     tf = toks.groupBy("source", "term").agg(F.count("*").alias("tf"))
@@ -506,10 +507,10 @@ SAMPLING_ORACLES = {
     "source_terms": f"""
         WITH raw AS (
           SELECT source,
-                 unnest(str_split(lower(
-                   text || ' topic' || substr(source, 4)
-                        || ' topic' || substr(source, 4)
-                        || ' niche' || CAST(doc_id % 7 AS VARCHAR)), ' '))
+                 unnest({words_sql(
+                   "text || ' topic' || substr(source, 4)"
+                   " || ' topic' || substr(source, 4)"
+                   " || ' niche' || CAST(doc_id % 7 AS VARCHAR)")})
                  AS term
           FROM documents),
         toks AS (SELECT source, term FROM raw

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.expressions import lower_expr, words, words_sql
 from .scan import widen
 
 STOPWORDS = {
@@ -27,17 +28,17 @@ STOPWORDS = {
     "de": ("der", "die", "das", "und", "in", "den", "von", "zu", "mit", "ist"),
 }
 LANG_ORDER = ("en", "es", "de")  # deterministic tie-break order
+_ALL_STOPS = STOPWORDS["en"] + STOPWORDS["es"] + STOPWORDS["de"]
 
 # BPE-ish segmentation: letter runs, digit runs, or single non-space symbols.
 BPE_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def _tokens(text):
-    return F.split(F.lower(text), " ", -1)
-
-
-def _stop_hits(tokens, lang: str):
-    return F.size(F.filter(tokens, lambda t: t.isin(*STOPWORDS[lang])))
+def pred_lang(hits_en, hits_es, hits_de):
+    """Argmax over (en, es, de) stopword hits, ties to the earlier
+    language (``LANG_ORDER``); ``PRED_LANG_SQL`` is its DuckDB twin."""
+    return (F.when((hits_en >= hits_es) & (hits_en >= hits_de), "en")
+            .when(hits_es >= hits_de, "es").otherwise("de"))
 
 
 def with_lang_pred(docs: DataFrame) -> DataFrame:
@@ -46,14 +47,12 @@ def with_lang_pred(docs: DataFrame) -> DataFrame:
     split/filter subtree would be re-evaluated at every reference
     (higher-order functions get no codegen/CSE): 3 hit filters + the
     argmax reusing them = ~7 full re-tokenizations per row."""
-    docs = docs.withColumn("toks", _tokens(F.col("text")))
+    docs = docs.withColumn("toks", words("text"))
     for lang in LANG_ORDER:
-        docs = docs.withColumn(f"hits_{lang}", _stop_hits(F.col("toks"), lang))
-    pred = (F.when((F.col("hits_en") >= F.col("hits_es"))
-                   & (F.col("hits_en") >= F.col("hits_de")), "en")
-            .when(F.col("hits_es") >= F.col("hits_de"), "es")
-            .otherwise("de"))
-    return docs.withColumn("pred_lang", pred)
+        docs = docs.withColumn(f"hits_{lang}", F.size(F.filter(
+            "toks", lambda t: t.isin(*STOPWORDS[lang]))))
+    return docs.withColumn("pred_lang", pred_lang(
+        *[F.col(f"hits_{lang}") for lang in LANG_ORDER]))
 
 
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -73,12 +72,10 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokens + counts as materialized columns (see q_lang_id: inline HOF
     # subtrees re-tokenize once per reference — n_tok alone is read 5x here)
     docs = (widen(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-            .withColumn("toks", _tokens(F.col("text")))
+            .withColumn("toks", words("text"))
             .withColumn("n_tok", F.size("toks"))
             .withColumn("stop_all", F.size(F.filter(
-                F.col("toks"),
-                lambda t: t.isin(*(STOPWORDS["en"] + STOPWORDS["es"]
-                                   + STOPWORDS["de"])))))
+                "toks", lambda t: t.isin(*_ALL_STOPS))))
             .withColumn("n_punct", F.size(F.regexp_extract_all(
                 F.col("text"), F.lit(r"[^\w\s]"), 0))))
     n_tok = F.col("n_tok")
@@ -123,7 +120,7 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     10^12-doc dedup pre-pass buckets the corpus)."""
     docs = widen(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     norm = F.trim(F.regexp_replace(
-        F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9\s]", ""),
+        F.regexp_replace(lower_expr("text"), r"[^a-z0-9\s]", ""),
         r"\s+", " "))
     fp = F.md5(norm)
     return (docs.select(
@@ -137,35 +134,36 @@ def _in_list(vals: tuple[str, ...]) -> str:
     return ", ".join(f"'{v}'" for v in vals)
 
 
-_ALL_STOPS = STOPWORDS["en"] + STOPWORDS["es"] + STOPWORDS["de"]
+_WORDS = words_sql("text")
+PRED_LANG_SQL = """CASE WHEN hits_en >= hits_es AND hits_en >= hits_de
+    THEN 'en' WHEN hits_es >= hits_de THEN 'es' ELSE 'de' END"""
+
+
+def stop_hits_sql(tokens: str) -> str:
+    """DuckDB twin of ``with_lang_pred``'s ``hits_<lang>`` columns, over
+    the SQL list expression ``tokens``."""
+    return ", ".join(
+        f"len(list_filter({tokens}, x -> x IN ({_in_list(STOPWORDS[lang])})))"
+        f" AS hits_{lang}" for lang in LANG_ORDER)
+
 
 TEXT_ORACLES = {
     "lang_id": f"""
         WITH t AS (
-          SELECT doc_id, lang,
-            len(list_filter(str_split(lower(text), ' '),
-                x -> x IN ({_in_list(STOPWORDS['en'])}))) AS hits_en,
-            len(list_filter(str_split(lower(text), ' '),
-                x -> x IN ({_in_list(STOPWORDS['es'])}))) AS hits_es,
-            len(list_filter(str_split(lower(text), ' '),
-                x -> x IN ({_in_list(STOPWORDS['de'])}))) AS hits_de
-          FROM documents)
+          SELECT doc_id, lang, {stop_hits_sql(_WORDS)} FROM documents)
         SELECT doc_id, lang, hits_en, hits_es, hits_de,
-               CASE WHEN hits_en >= hits_es AND hits_en >= hits_de THEN 'en'
-                    WHEN hits_es >= hits_de THEN 'es'
-                    ELSE 'de' END AS pred_lang,
-               CAST(CASE WHEN (CASE WHEN hits_en >= hits_es AND hits_en >= hits_de
-                               THEN 'en' WHEN hits_es >= hits_de THEN 'es'
-                               ELSE 'de' END) = lang THEN 1 ELSE 0 END AS INT) AS match
+               {PRED_LANG_SQL} AS pred_lang,
+               CAST(CASE WHEN ({PRED_LANG_SQL}) = lang THEN 1 ELSE 0 END
+                    AS INT) AS match
         FROM t ORDER BY doc_id
     """,
     "quality_score": rf"""
         WITH t AS (
           SELECT doc_id,
-            len(str_split(lower(text), ' ')) AS n_tok,
+            len({_WORDS}) AS n_tok,
             length(text) AS n_chars,
             len(regexp_extract_all(text, '[^\w\s]')) AS n_punct,
-            len(list_filter(str_split(lower(text), ' '),
+            len(list_filter({_WORDS},
                 x -> x IN ({_in_list(_ALL_STOPS)}))) AS stop_all
           FROM documents)
         SELECT doc_id,
@@ -619,7 +617,7 @@ def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     precedent), rounded at 4."""
     toks = (widen(spark.read.parquet(f"{sf_dir}/documents.parquet"))
             .select("doc_id",
-                    F.explode(F.split(F.lower("text"), " ", -1)).alias("tok")))
+                    F.explode(words("text")).alias("tok")))
     per_tok = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("c"))
     ln2 = 0.6931471805599453
     ent = (-F.sum((F.col("c") / F.col("n"))
@@ -640,9 +638,9 @@ def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-TEXT_ORACLES["token_entropy"] = """
+TEXT_ORACLES["token_entropy"] = f"""
     WITH toks AS (
-      SELECT doc_id, unnest(str_split(lower(text), ' ')) AS tok
+      SELECT doc_id, unnest({_WORDS}) AS tok
       FROM documents),
     per_tok AS (
       SELECT doc_id, tok, count(*) AS c FROM toks GROUP BY doc_id, tok),
@@ -686,7 +684,7 @@ def q_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``TakeOrderedAndProject`` top-k. The shuffle carries one partial row
     per distinct pair per task — vocabulary-sized, not corpus-sized."""
     docs = (widen(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-            .select("doc_id", F.split(F.lower("text"), " ", -1).alias("w"))
+            .select("doc_id", words("text").alias("w"))
             .withColumn("n", F.size("w"))
             .filter(F.col("n") >= 2))
     pairs = docs.select(
@@ -701,8 +699,8 @@ def q_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TEXT_ORACLES["bpe_pair_stats"] = f"""
     WITH w AS (
-      SELECT doc_id, str_split(lower(text), ' ') AS w,
-             len(str_split(lower(text), ' ')) AS n
+      SELECT doc_id, {_WORDS} AS w,
+             len({_WORDS}) AS n
       FROM documents),
     pairs AS (
       SELECT doc_id,
@@ -869,17 +867,10 @@ TEXT_ORACLES["corpus_curation"] = f"""
                i -> str_split(text, ' ')[i] || ' '
                     || str_split(text, ' ')[i+1]))))
           / (len(str_split(text, ' ')) - 1) ELSE 0.0 END, 4) AS dup_frac,
-        len(list_filter(str_split(lower(text), ' '),
-            x -> x IN ({_in_list(STOPWORDS['en'])}))) AS hits_en,
-        len(list_filter(str_split(lower(text), ' '),
-            x -> x IN ({_in_list(STOPWORDS['es'])}))) AS hits_es,
-        len(list_filter(str_split(lower(text), ' '),
-            x -> x IN ({_in_list(STOPWORDS['de'])}))) AS hits_de
+        {stop_hits_sql(_WORDS)}
       FROM canon),
     flagged AS (
-      SELECT *,
-        CASE WHEN hits_en >= hits_es AND hits_en >= hits_de THEN 'en'
-             WHEN hits_es >= hits_de THEN 'es' ELSE 'de' END AS pred_lang,
+      SELECT *, {PRED_LANG_SQL} AS pred_lang,
         CASE WHEN n_words >= {GOPHER_MIN_WORDS}
               AND n_words <= {GOPHER_MAX_WORDS}
               AND mean_wl >= {GOPHER_MIN_MEAN_WORD_LEN}

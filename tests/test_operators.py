@@ -497,12 +497,9 @@ class TestDedupSignatureOracle:
         """The sf0.001 derived dedup corpus plus the planted rows, as one
         DuckDB table ``corpus`` and the same rows as a Spark frame, so
         both engines sign identical input."""
-        import duckdb
-
         from document_converter_api_spark.operators import dedup as D
-        con = duckdb.connect()
-        con.execute("CREATE VIEW documents AS SELECT * FROM "
-                    f"'{self.SF}/documents.parquet'")
+        from tools.check_oracle import connect
+        con = connect(self.SF)
         con.execute(f"CREATE TABLE corpus AS {D._CORPUS_SQL}")
         con.executemany("INSERT INTO corpus VALUES (?, ?)", self.PLANTED)
         rows = con.execute("SELECT doc_id, text FROM corpus").fetchall()
@@ -813,10 +810,10 @@ class TestTemporalJoins:
         assert "CartesianProduct" not in plan
 
     def test_range_join_matches_oracle_and_plans_equi(self, spark):
-        import duckdb
         from document_converter_api_spark.operators.temporal import (
             TEMPORAL_ORACLES, q_range_join,
         )
+        from tools.check_oracle import connect
         sf = "/root/testdata/sf0.001"
         df = q_range_join(spark, sf)
         plan_of, _ = self._plan_helpers()
@@ -825,10 +822,8 @@ class TestTemporalJoins:
         assert "CartesianProduct" not in plan
         got = {(r.window_id, r.n_clicks, r.first_click, r.last_click)
                for r in df.collect()}
-        con = duckdb.connect()
-        con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet'")
-        want = {(w, n, f, l) for (w, _, _, n, f, l)
-                in con.execute(TEMPORAL_ORACLES["range_join"]).fetchall()}
+        want = {(w, n, f, l) for (w, _, _, n, f, l) in connect(sf).execute(
+            TEMPORAL_ORACLES["range_join"]).fetchall()}
         assert got == want and got
 
 
@@ -887,36 +882,24 @@ class TestSpanDedup:
         for r in copies:
             assert (r.n_spans, r.dup_words, r.dup_frac) == (1, r.n_words, 1.0)
 
-    def test_shared_paragraph_span_boundaries(self, spark):
+    def test_shared_paragraph_span_boundaries(self, spark, tmp_path):
         """Two docs sharing only a middle 12-word run: with K=8 the
-        duplicated shingles start at paragraph positions 1..5, so the
-        island covers exactly the 12 shared words — nothing else."""
-        from document_converter_api_spark.operators.dedup import SPAN_K
-        from pyspark.sql import functions as F
-        from pyspark.sql.window import Window
+        duplicated shingles start at paragraph positions 1..5, so each
+        doc has one island covering exactly the 12 shared words — nothing
+        else. Neither doc_id is divisible by 5 or 7, so the derived
+        corpus adds no copies of them."""
+        from document_converter_api_spark.operators.dedup import (
+            SPAN_K, q_span_dedup,
+        )
         assert SPAN_K == 8
         shared = " ".join(f"s{i}" for i in range(12))
         a = "a0 a1 a2 " + shared + " a3 a4"
         b = "b0 " + shared + " b1 b2 b3 b4 b5"
-        docs = spark.createDataFrame([(1, a), (2, b)], "doc_id long, text string")
-        # re-run the operator's exact pipeline on the two-doc corpus
-        k = SPAN_K
-        sh = (docs.withColumn("words", F.split(F.lower("text"), " ", -1))
-              .filter(F.size("words") >= k)
-              .select("doc_id", F.size("words").alias("n_words"),
-                      F.posexplode(F.transform(
-                          F.sequence(F.lit(1), F.size("words") - k + 1),
-                          lambda i: F.md5(F.concat_ws(" ", F.slice("words", i, k)))
-                      )).alias("p0", "h"))
-              .select("doc_id", "n_words", (F.col("p0") + 1).alias("pos"), "h"))
-        marked = (sh.withColumn("c", F.count("*").over(Window.partitionBy("h")))
-                  .filter("c > 1").groupBy("doc_id")
-                  .agg(F.min("pos").alias("lo"), F.max("pos").alias("hi"),
-                       F.count("*").alias("n")))
-        got = {r.doc_id: (r.lo, r.hi, r.n) for r in marked.collect()}
-        # doc 1: shared words at positions 4..15 -> shingle starts 4..8
-        # doc 2: shared words at positions 2..13 -> shingle starts 2..6
-        assert got == {1: (4, 8, 5), 2: (2, 6, 5)}
+        (spark.createDataFrame([(1, a), (2, b)], "doc_id long, text string")
+         .write.parquet(str(tmp_path / "documents.parquet")))
+        got = {r.doc_id: (r.n_spans, r.dup_words)
+               for r in q_span_dedup(spark, str(tmp_path)).collect()}
+        assert got == {1: (1, 12), 2: (1, 12)}
 
 
 class TestFrequencyMembershipSketches:
@@ -1112,18 +1095,16 @@ class TestAdviceHardeningR3:
         population; (k-1)/h_k is biased there and the correct estimate is
         exactly k. sf0.001 has 15 distinct users < KMV_K=128; both engines
         must take the guard branch and agree."""
-        import duckdb
         from document_converter_api_spark.operators.sketch import (
             KMV_K, SKETCH_ORACLES, q_kmv_distinct,
         )
+        from tools.check_oracle import connect
         row = q_kmv_distinct(spark, "/root/testdata/sf0.001").collect()[0]
         assert row.k < KMV_K
         assert row.kmv_estimate == float(row.k) == 15.0
         assert row.err_pct == 0.0
-        con = duckdb.connect()
-        con.execute("CREATE VIEW events AS SELECT * FROM "
-                    "'/root/testdata/sf0.001/events.parquet'")
-        orow = con.execute(SKETCH_ORACLES["kmv_distinct"]).fetchone()
+        orow = connect("/root/testdata/sf0.001").execute(
+            SKETCH_ORACLES["kmv_distinct"]).fetchone()
         assert (row.k, row.kth_min, row.kmv_estimate, row.n_exact,
                 row.err_pct) == orow
 

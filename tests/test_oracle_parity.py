@@ -1,72 +1,114 @@
-"""Oracle-parity inside pytest: a fast subset of the driver's DuckDB gate
-(full surface: ``python tools/check_oracle.py``). Runs at sf0.001 so the
-suite stays quick; the driver re-checks everything at sf0.01."""
+"""Oracle-parity inside pytest at sf0.001: a fast subset of the driver's
+DuckDB gate (full surface: ``python tools/check_oracle.py``), plus every
+query whose oracle reads ``documents.text``, run with non-ASCII rows planted
+into a copy of the corpus (the oracle corpora are ASCII-only)."""
 
 from __future__ import annotations
 
 import os
+import re
+import shutil
 import sys
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import __spark_entry__ as entrymod  # noqa: E402
+from tools.check_oracle import check_parity, connect  # noqa: E402
+
 SF = "/root/testdata/sf0.001"
 
-# cheap-but-representative subset: one per operator family
+# cheap-but-representative subset: one per operator family (the
+# documents.text queries run in TEXT_QUERIES instead)
 SUBSET = (
-    "status_counts", "jobs_listing", "point_lookup", "tpch_q1",
-    "window_rank", "plain_text_format", "chunk_text", "json_props",
-    "dedup_exact", "dedup_minhash_lsh", "ann_cosine_topk",
-    "lang_id", "fingerprint", "multimodal_decode", "host_stats_salted",
+    "status_counts", "jobs_listing", "point_lookup", "tpch_q1", "window_rank",
+    "json_props", "ann_cosine_topk", "multimodal_decode", "host_stats_salted",
     "rollup_stats", "distinct_users", "except_users", "top_revenue_orders",
-    "download_names", "result_json", "region_revenue", "part_type_share",
-    "shipping_priority", "big_orders", "sessionize", "bucketed_join",
-    "ann_ivf", "value_percentiles", "gopher_rules", "crawl_rate",
-    "multimodal_frame_sample", "multimodal_audio_features",
-    "corpus_curation", "pii_redact", "decontaminate", "token_pack",
-    "unicode_normalize", "unigram_logprob", "snapshot_diff",
-    "mix_sample", "blocklist_filter", "source_terms",
-    "bm25_search", "quality_classifier", "mojibake_repair", "split_assign",
-    "domain_pagerank", "politeness_audit", "incremental_dedup",
-    "weighted_sample", "length_buckets", "range_join_variable",
-    "doc_repetition", "bpe_pair_stats", "chunk_overlap", "token_entropy",
+    "download_names", "region_revenue", "part_type_share", "shipping_priority",
+    "big_orders", "sessionize", "bucketed_join", "ann_ivf", "crawl_rate",
+    "value_percentiles", "multimodal_frame_sample",
+    "multimodal_audio_features", "mix_sample", "blocklist_filter",
+    "split_assign", "domain_pagerank", "politeness_audit", "weighted_sample",
+    "range_join_variable",
 )
+
+ORACLES = entrymod.oracle_sql()
+TEXT_QUERIES = tuple(
+    name for name, sql in ORACLES.items()
+    if re.search(r"\bdocuments\b", sql) and re.search(r"\btext\b", sql))
+
+# (doc_id, text, lang, source), appended to sf0.001's documents
+PLANTED = [
+    (90001, "ΟΔΟΣ οδος ΤΗΣ της the of and ΟΔΟΣ ΤΗΣ the of and", "en", "src0"),
+    (90002, "İSTANBUL istanbul İZMİR izmir the and a to İSTANBUL the and a to",
+     "en", "src1"),
+    (90003, "STRAẞE straße Straße FUSS fuß der die das und STRAẞE der die "
+     "das und", "de", "src2"),
+    (90004, "ǄEMAL ǆemal ǅemal ﬁle FILE the el la ǄEMAL ǆemal the el la",
+     "es", "src0"),
+    (90005, "İT İS İN THE ΟΔΟΣ οδος", "en", "src1"),
+]
 
 
 @pytest.fixture(scope="module")
-def duck():
+def corpora(tmp_path_factory):
+    """(sf_dir, DuckDB connection) for sf0.001 and for a copy of it with
+    ``PLANTED`` appended to documents.parquet; the other tables are copied
+    unchanged."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = tmp_path_factory.mktemp("sf0.001_planted")
+    for name in os.listdir(SF):
+        if name != "documents.parquet":
+            shutil.copy(os.path.join(SF, name), out)
+    docs = pq.read_table(f"{SF}/documents.parquet")
+    doc_id, text, lang, source = zip(*PLANTED)
+    extra = pa.table({"doc_id": doc_id, "text": text, "lang": lang,
+                      "source": source, "n_chars": [len(t) for t in text]},
+                     schema=docs.schema)
+    pq.write_table(pa.concat_tables([docs, extra]),
+                   str(out / "documents.parquet"))
+    planted = str(out)
+    return {"plain": (SF, connect(SF)), "planted": (planted, connect(planted))}
+
+
+@pytest.mark.parametrize("name", SUBSET + TEXT_QUERIES)
+def test_query_matches_oracle(spark, corpora, name):
+    sf, con = corpora["planted" if name in TEXT_QUERIES else "plain"]
+    check_parity(entrymod.queries()[name](spark, sf),
+                 con.execute(ORACLES[name]))
+
+
+# word-final and lone Σ/σ/ς, İ, ẞ/ß, Ǆ/ǅ/ǆ, ﬁ, Kelvin K, Ohm Ω,
+# Ångström Å, accented Greek capitals, and the empty string
+TOKENIZER_PROBES = [
+    "ΟΔΟΣ ΤΗΣ ΠΟΛΗΣ", "Σ σ ς ΣΣ", "İSTANBUL İZMİR İ", "STRAẞE ẞ ß",
+    "ǄEMAL Ǆ ǅ ǆ", "ﬁle ﬁ FILE", "\u212a \u2126 \u212b", "ΆΪ", "",
+]
+
+
+def test_tokenizer_agrees_across_engines(spark):
+    """Spark ``words`` = DuckDB ``words_sql`` = Python ``words_py``."""
     import duckdb
+
+    from document_converter_api_spark.functions.expressions import (
+        words, words_py, words_sql,
+    )
+    want = [words_py(s) for s in TOKENIZER_PROBES]
+    got = spark.createDataFrame(list(enumerate(TOKENIZER_PROBES)),
+                                "i int, text string")
+    assert [r.w for r in got.orderBy("i").select(
+        words("text").alias("w")).collect()] == want
     con = duckdb.connect()
-    for t in ("region nation customer supplier part orders lineitem events "
-              "documents embeddings").split():
-        p = f"{SF}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    return con
-
-
-@pytest.mark.parametrize("name", SUBSET)
-def test_query_matches_oracle(spark, duck, name):
-    from tools.check_oracle import value_hash
-    import __spark_entry__ as entrymod
-
-    fn = entrymod.queries()[name]
-    sql = entrymod.oracle_sql()[name]
-    sdf = fn(spark, SF)
-    srows = [tuple(r) for r in sdf.collect()]
-    res = duck.execute(sql)
-    dcols = [d[0] for d in res.description]
-    drows = [tuple(r) for r in res.fetchall()]
-    assert len(srows) == len(drows), f"rowcount {len(srows)} != {len(drows)}"
-    assert sorted(sdf.columns) == sorted(dcols)
-    assert value_hash(list(sdf.columns), srows) == value_hash(dcols, drows)
+    assert [con.execute(f"SELECT {words_sql('?')}", [s]).fetchone()[0]
+            for s in TOKENIZER_PROBES] == want
 
 
 def test_every_query_has_callable_signature():
-    import __spark_entry__ as entrymod
     qs = entrymod.queries()
     assert len(qs) >= 30
-    oracles = entrymod.oracle_sql()
     # every oracle key must have a query; rows-only queries are allowed
-    assert set(oracles) <= set(qs)
+    assert set(ORACLES) <= set(qs)
+    assert len(TEXT_QUERIES) >= 43

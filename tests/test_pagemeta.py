@@ -246,3 +246,35 @@ class TestReadability:
         assert "BatchEvalPython" not in plan
         assert "ArrowEvalPython" not in plan
         assert "Join" not in plan
+
+
+def test_planted_turkish_page_matches_oracles(spark, tmp_path, monkeypatch):
+    """The smoke pages plus one page of Turkish dotted capitals and a Greek
+    word-final Σ: the three queries that lowercase page text equal their
+    DuckDB oracles on it."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tools.check_oracle import check_parity
+
+    url = "https://tr.example/istanbul.html"
+    text = "İT İS İN THE İSTANBUL ΟΔΟΣ. İZMİR is it."
+    smoke = pq.read_table(L.pages_path())
+    page = pa.table({
+        "url": [url], "warc_ts": smoke.column("warc_ts").slice(0, 1),
+        "html": [f'<html lang="en"><body><p>{text}</p></body></html>'
+                 .encode()],
+        "text": [text], "lang": ["en"]}, schema=smoke.schema)
+    path = str(tmp_path / "pages.parquet")
+    pq.write_table(pa.concat_tables([smoke, page]), path)
+    monkeypatch.setenv("SPARK_GRAFT_PAGES", path)
+    con = duckdb.connect()
+    for name, q in (("lang_audit", M.q_lang_audit),
+                    ("readability", M.q_readability),
+                    ("host_quality", M.q_host_quality)):
+        sql = M.PAGEMETA_ORACLES[name].replace("__PAGES_PARQUET__", path)
+        check_parity(q(spark, SF), con.execute(sql))
+    # İT İS İN THE is it: the page does exercise the case map
+    audit = M.q_lang_audit(spark, SF).filter(F.col("url") == url).first()
+    assert audit.hits_en == 6

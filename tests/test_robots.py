@@ -179,7 +179,7 @@ class TestDelayCompliance:
         import pyarrow as pa
         import pyarrow.parquet as pqw
 
-        from tools.check_oracle import value_hash
+        from tools.check_oracle import check_parity
 
         t0 = dt.datetime(2026, 1, 1)
         rows = [
@@ -220,16 +220,10 @@ class TestDelayCompliance:
 
         # full oracle parity on this corpus, both affected queries
         con = duckdb.connect()
-        for name in ("delay_compliance", "robots_rules"):
+        for name, q in (("delay_compliance", R.q_delay_compliance),
+                        ("robots_rules", R.q_robots_rules)):
             sql = R.ROBOTS_ORACLES[name].replace("__PAGES_PARQUET__", path)
-            cur = con.execute(sql)
-            cols = [d[0] for d in cur.description]
-            orc = cur.fetchall()
-            sdf = (R.q_delay_compliance(spark, SF) if name ==
-                   "delay_compliance" else R.q_robots_rules(spark, SF))
-            srows = [tuple(r) for r in sdf.collect()]
-            assert value_hash(sdf.columns, srows) == value_hash(cols, orc), \
-                name
+            check_parity(q(spark, SF), con.execute(sql))
 
     def test_fixture_crawl_is_polite(self, report):
         """The deterministic 7-minute timestamp walk can never violate

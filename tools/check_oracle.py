@@ -1,7 +1,8 @@
 """Local replica of the driver's correctness gate: run every
 ``__spark_entry__.queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB over the same parquet, compare row count + schema (column names) +
-order-insensitive value hash.
+order-insensitive value hash. ``connect`` and ``check_parity`` are that
+comparison for the test suite.
 
 Usage: python tools/check_oracle.py [sf_dir] [only_query_name ...]
 """
@@ -47,23 +48,61 @@ def _norm(v):
     return str(v)
 
 
-def value_hash(cols: list[str], rows: list[tuple]) -> str:
+def _lines(cols: list[str], rows: list[tuple]) -> list[str]:
+    """Each row normalized with its columns in name order, rows sorted."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted(
-        "\x1f".join(_norm(r[i]) for i in order) for r in rows
-    )
+    return sorted("\x1f".join(_norm(r[i]) for i in order) for r in rows)
+
+
+def value_hash(cols: list[str], rows: list[tuple]) -> str:
     h = hashlib.sha256()
-    for line in lines:
+    for line in _lines(cols, rows):
         h.update(line.encode("utf-8"))
         h.update(b"\n")
     return h.hexdigest()[:16]
+
+
+def connect(sf_dir: str):
+    """A DuckDB connection with one view per ``TABLES`` parquet found in
+    ``sf_dir``, the names the oracle SQL reads."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+
+def check_parity(sdf, cur) -> int:
+    """The oracle comparison: Spark frame ``sdf`` and executed DuckDB
+    cursor ``cur`` must agree on row count, column names and
+    ``value_hash``. Raises AssertionError naming what differs (with the
+    first differing row); returns the row count."""
+    srows = [tuple(r) for r in sdf.collect()]
+    scols = list(sdf.columns)
+    dcols = [d[0] for d in cur.description]
+    drows = [tuple(r) for r in cur.fetchall()]
+    problems = []
+    if len(srows) != len(drows):
+        problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
+    if sorted(scols) != sorted(dcols):
+        problems.append(f"schema spark={sorted(scols)} duck={sorted(dcols)}")
+    elif (sh := value_hash(scols, srows)) != (dh := value_hash(dcols, drows)):
+        a, b = next(((a, b) for a, b in zip(
+            _lines(scols, srows), _lines(dcols, drows)) if a != b), ("", ""))
+        problems.append(f"valuehash spark={sh} duck={dh}"
+                        f"\n   spark: {a[:200]}\n   duck : {b[:200]}")
+    if problems:
+        raise AssertionError("; ".join(problems))
+    return len(srows)
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    import duckdb
     import __spark_entry__ as entrymod
     from pyspark.sql import SparkSession
 
@@ -74,65 +113,28 @@ def main() -> int:
              .config("spark.ui.enabled", "false")
              .getOrCreate())
 
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-
+    con = connect(sf_dir)
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in queries.items():
         if only and name not in only:
             continue
-        try:
-            sdf = fn(spark, sf_dir)
-            srows = [tuple(r) for r in sdf.collect()]
-            scols = list(sdf.columns)
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: spark error: {e}")
-            failures.append(name)
-            continue
         sql = oracles.get(name)
-        if sql is None:
-            print(f"SKIP {name}: rows-only check (no oracle), rows={len(srows)}")
-            continue
         try:
-            res = con.execute(sql)
-            dcols = [d[0] for d in res.description]
-            drows = [tuple(r) for r in res.fetchall()]
+            if sql is None:
+                rows = fn(spark, sf_dir).count()
+                print(f"SKIP {name}: rows-only check (no oracle), rows={rows}")
+                continue
+            rows = check_parity(fn(spark, sf_dir), con.execute(sql))
+        except AssertionError as e:
+            print(f"FAIL {name}: {e}")
+            failures.append(name)
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: duckdb error: {e}")
-            failures.append(name)
-            continue
-        problems = []
-        if len(srows) != len(drows):
-            problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
-        if sorted(scols) != sorted(dcols):
-            problems.append(f"schema spark={sorted(scols)} duck={sorted(dcols)}")
-        else:
-            sh = value_hash(scols, srows)
-            dh = value_hash(dcols, drows)
-            if sh != dh:
-                problems.append(f"valuehash spark={sh} duck={dh}")
-                # show first differing row for debugging
-                so = sorted("\x1f".join(_norm(r[i]) for i in
-                            sorted(range(len(scols)), key=lambda i: scols[i]))
-                            for r in srows)
-                do = sorted("\x1f".join(_norm(r[i]) for i in
-                            sorted(range(len(dcols)), key=lambda i: dcols[i]))
-                            for r in drows)
-                for a, b in zip(so, do):
-                    if a != b:
-                        print(f"   spark: {a[:200]}")
-                        print(f"   duck : {b[:200]}")
-                        break
-        if problems:
-            print(f"FAIL {name}: {'; '.join(problems)}")
+            print(f"FAIL {name}: error: {e}")
             failures.append(name)
         else:
-            print(f"OK   {name}: rows={len(srows)}")
+            print(f"OK   {name}: rows={rows}")
     spark.stop()
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0
