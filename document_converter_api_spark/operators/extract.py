@@ -24,16 +24,15 @@ Scale design (100 TB / 10^12 docs):
 * per-doc failures are captured in the ``error`` column, never raised
   (app/main.py:438-441 semantics);
 * each task starts by dropping the worker's cached zip-archive finders
-  (:func:`_drop_zip_finders`): a reused Python worker otherwise re-reads
-  the directories of ``pyspark.zip`` and the Spark jar before every task,
-  a fixed cost that grows with the task count, not with the data.
+  (``functions.pystage.drop_zip_finders``): a reused Python worker
+  otherwise re-reads the directories of ``pyspark.zip`` and the Spark jar
+  before every task, a fixed cost that grows with the task count, not
+  with the data.
 """
 
 from __future__ import annotations
 
-import sys
 import time
-import zipimport
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -48,6 +47,7 @@ from ..functions.expressions import (
     is_large_expr,
     sniff_content_type_expr,
 )
+from ..functions.pystage import drop_zip_finders
 
 # Per-document wall-clock budget for the Arrow stage, seconds. The
 # reference DECLARED this number but never enforced it
@@ -102,38 +102,6 @@ def _byte_length(values: pa.Array) -> pa.Array:
     return pc.fill_null(pc.binary_length(values), 0).cast(pa.int64())
 
 
-def _drop_zip_finders() -> None:
-    """Delete the ``zipimporter`` entries from ``sys.path_importer_cache``.
-
-    Three things together make every task of this stage pay for re-reading
-    whole zip archives it never imports from:
-
-    * before every task, pyspark's reused worker calls
-      ``importlib.invalidate_caches()`` (``pyspark.worker_util.
-      setup_spark_files``);
-    * on CPython 3.11 that makes every cached ``zipimport.zipimporter``
-      re-read its archive's whole central directory;
-    * Spark puts ``pyspark.zip`` and the spark-core jar on every worker's
-      ``PYTHONPATH``, and the worker's own imports leave one finder cached
-      per package directory inside them (16 with Spark 4.1).
-
-    On a 4-core VM one such invalidation took 0.12-0.23 CPU-s per task,
-    more than the Arrow boundary costs. The import system rebuilds a
-    dropped finder the next time something imports through its path; in
-    steady state nothing does, so the next invalidation has nothing to
-    re-read. ``FileFinder`` entries stay (pyspark invalidates for them:
-    new ``.py`` files in the Spark files dir), and ``sys.path`` and
-    ``sys.modules`` are untouched.
-
-    Delete this helper when pyspark stops invalidating the import caches
-    per task, or when the interpreter re-reads zip directories lazily.
-    """
-    cache = sys.path_importer_cache
-    for path in [p for p, f in cache.items()
-                 if isinstance(f, zipimport.zipimporter)]:
-        del cache[path]
-
-
 def extract_arrow_batches(batches: Iterator[pa.RecordBatch],
                           max_batch_bytes: int = 64 * 1024 * 1024,
                           doc_time_budget_s: float | None = DOC_TIME_BUDGET_S
@@ -144,7 +112,7 @@ def extract_arrow_batches(batches: Iterator[pa.RecordBatch],
     parser alone can compute: ``markdown``, ``error`` and ``parse_ms``.
     The other input columns pass through as the same Arrow arrays, and the
     byte counts are Arrow kernels over ``html`` and ``markdown``."""
-    _drop_zip_finders()
+    drop_zip_finders()
     for batch in _slice_batches(batches, max_batch_bytes):
         html = batch.column("html")
         md_out: list[str | None] = []

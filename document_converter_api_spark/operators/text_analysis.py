@@ -1,25 +1,27 @@
-"""Text-analysis operators for training-data pipelines over ``documents``.
+"""Text-analysis operators for training-data pipelines over ``documents``:
+language ID, quality score, token counting, fingerprinting, the Gopher
+quality rules and line/word-n-gram repetition gates, token entropy, BPE
+pair statistics, URL normalization and the curation join.
 
-All four are pure Catalyst expressions (JVM-side, WholeStageCodegen — the
-100 TB path never enters Python for these):
-
-* language-ID  — stopword-hit heuristic with deterministic argmax;
-* quality score — length / punctuation / stopword-ratio signals,
-  integer-ratio math rounded once at the end;
-* token counting — whitespace tokens plus a BPE-ish regex segmentation;
-* fingerprinting — digest of whitespace/punct-normalized text (the
-  canonical-form key used by fuzzy-dedup pre-passes).
+Every operator is Catalyst expressions and aggregates, except
+``ngram_repetition``: its signals are a function of one document's text,
+so one ``mapInPandas`` stage computes them row by row, and no gram
+leaves its document's task.
 
 Each has a DuckDB SQL twin in ``TEXT_ORACLES`` with identical constants.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.expressions import lower_expr, words, words_sql
+from ..functions.pystage import drop_zip_finders
 from .scan import widen
 
 STOPWORDS = {
@@ -392,126 +394,87 @@ GOPHER_DUP_NS = (5, 6, 7, 8, 9, 10)
 GOPHER_TOP_MAX = {2: 0.20, 3: 0.18, 4: 0.16}
 GOPHER_DUP_MAX = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10}
 
+_NGRAM_COLS = ([f"top{n}_frac" for n in GOPHER_TOP_NS]
+               + [f"dup{n}_frac" for n in GOPHER_DUP_NS])
+_NGRAM_MAX = [GOPHER_TOP_MAX[n] for n in GOPHER_TOP_NS] + [
+    GOPHER_DUP_MAX[n] for n in GOPHER_DUP_NS]
+_MICRO = Decimal("0.000001")
 
-def q_ngram_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher's word-n-gram repetition gate, the grain `doc_repetition`
-    (lines) doesn't cover. Per document:
+
+def _round6(x: float) -> float:
+    """Spark's ``round(double, 6)``: HALF_UP on the double's shortest
+    decimal (``BigDecimal(Double.toString(d))``). Python's ``round`` works
+    on the exact binary value instead: 5/128 = 0.0390625 gives 0.039062
+    there, 0.039063 in Spark and DuckDB."""
+    return float(Decimal(repr(x)).quantize(_MICRO, ROUND_HALF_UP))
+
+
+def ngram_repetition_row(text: str | None) -> list:
+    """One document's Gopher word-n-gram repetition signals, in
+    ``_NGRAM_COLS`` order, then ``ngram_pass``:
 
     * ``top{2,3,4}_frac`` — characters covered by the MOST FREQUENT
-      n-gram (``count × length`` of the gram with the highest count;
-      ties broken toward the larger coverage, deterministically, via a
-      lexicographic ``max(struct(count, coverage))`` — identical struct
-      comparison semantics in Spark and DuckDB).
-    * ``dup{5..10}_frac`` — characters of DISTINCT word positions
+      n-gram: ``count × length`` of the gram with the largest
+      ``(count, count × length)``, so ties go to the larger coverage
+      (the ``max(struct(c, cov))`` of the oracle). 0 with fewer than n
+      words.
+    * ``dup{5..10}_frac`` — characters of the DISTINCT word positions
       covered by any n-gram occurring more than once. Overlapping
       occurrences count each character ONCE, so the fraction is bounded
       by 1 — the semantics Gopher's thresholds are calibrated for (a
-      naive ``sum(count × length)`` multiply-counts overlaps, can
-      exceed 3.0 on a stamped phrase, and silently tightens the gate).
-      Character weight is the word's length (joining spaces excluded);
-      the denominator is full ``length(text)``.
-    * ``ngram_pass`` — the paper-threshold gate over all nine signals.
+      naive ``sum(count × length)`` multiply-counts overlaps, can exceed
+      3.0 on a stamped phrase, and silently tightens the gate).
+      Character weight is the word's length (joining spaces excluded).
+    * ``ngram_pass`` — 1 when no signal exceeds its paper threshold.
 
-    Plan: ONE explode produces every (n, gram, start) triple — the
-    per-row gram build is ``transform(sequence, i -> slice(w, i, n))``
-    over a materialized words column (O(n·words), never O(words²) —
-    see the no-split-inside-lambda pin). The count shuffle keys on
-    (doc_id, n, gram): corpus-hot boilerplate grams spread across their
-    documents, so there is no hot key at any corpus size. Duplicated
-    grams rejoin their occurrences two-phase (groupBy + equi-join on
-    (doc_id, n, gram) — the span_dedup pattern; no window anywhere),
-    expand to covered positions, DISTINCT, then sum word lengths. The
-    gram explode is recomputed for the occurrence side rather than
-    persisted — caching an exploded corpus costs more than rebuilding
-    it from the scan at any interesting scale. Integer sums end to end;
-    the per-n division is the single float op, so parity is exact."""
-    docs = (widen(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-            .select("doc_id", F.coalesce("text", F.lit("")).alias("text")))
-    base = docs.select(
-        "doc_id", F.length("text").alias("n_chars"),
-        F.split("text", " ", -1).alias("w"))
+    Words are ``text.split(" ")`` with empty words kept (Spark
+    ``split(text, ' ', -1)``, DuckDB ``str_split``); lengths are code
+    points. Each fraction is over ``len(text)`` (0.0 for an empty text)
+    and rounded HALF_UP to 6 places (:func:`_round6`)."""
+    text = text or ""
+    w = text.split(" ")
+    fracs = []
+    for n in GOPHER_TOP_NS + GOPHER_DUP_NS:
+        grams = [" ".join(w[i:i + n]) for i in range(len(w) - n + 1)]
+        counts = Counter(grams)
+        if n in GOPHER_TOP_MAX:
+            chars = max(((c, c * len(g)) for g, c in counts.items()),
+                        default=(0, 0))[1]
+        else:
+            covered = set()
+            for i, g in enumerate(grams):
+                if counts[g] >= 2:
+                    covered.update(range(i, i + n))
+            chars = sum(len(w[p]) for p in covered)
+        fracs.append(_round6(chars / len(text)) if text else 0.0)
+    return fracs + [int(all(f <= m for f, m in zip(fracs, _NGRAM_MAX)))]
 
-    def _fam(n: int) -> F.Column:
-        # NB: the lambda must take exactly ONE parameter — pyspark infers
-        # HOF arity from the signature, so a `lambda i, n=n:` binding
-        # would silently receive (element, index) and the array INDEX
-        # would overwrite n. Bind n via this enclosing scope instead.
-        return (F.when(F.size("w") >= n,
-                       F.transform(
-                           F.sequence(F.lit(1), F.size("w") - (n - 1)),
-                           lambda i: F.struct(
-                               F.lit(n).alias("n"),
-                               F.array_join(F.slice("w", i, n), " ")
-                               .alias("g"),
-                               i.cast("int").alias("i"))))
-                .otherwise(
-                    F.array().cast("array<struct<n:int,g:string,i:int>>")))
 
-    fams = [_fam(n) for n in GOPHER_TOP_NS + GOPHER_DUP_NS]
-    grams = (base.select(
-                 "doc_id",
-                 F.explode(F.flatten(F.array(*fams))).alias("ng"))
-             .select("doc_id", F.col("ng.n").alias("n"),
-                     F.col("ng.g").alias("g"), F.col("ng.i").alias("i")))
-    counts = grams.groupBy("doc_id", "n", "g").agg(F.count("*").alias("c"))
-    # top-n: argmax by (count, coverage) — one aggregate, no self-join
-    topn = (counts.filter(F.col("n").isin(*GOPHER_TOP_NS))
-            .groupBy("doc_id", "n")
-            .agg(F.max(F.struct(
-                F.col("c").alias("c"),
-                (F.col("c") * F.length("g")).alias("cov")))
-                .getField("cov").alias("top_chars")))
-    # dup-n: duplicated grams -> occurrences -> distinct covered
-    # word positions -> word-length sum
-    dupg = (counts.filter((F.col("c") >= 2)
-                          & F.col("n").isin(*GOPHER_DUP_NS))
-            .select("doc_id", "n", "g"))
-    occ = (grams.filter(F.col("n").isin(*GOPHER_DUP_NS))
-           .join(dupg, ["doc_id", "n", "g"])
-           .select("doc_id", "n", "i"))
-    cover = (occ.select(
-                 "doc_id", "n",
-                 F.explode(F.sequence(F.col("i"),
-                                      F.col("i") + F.col("n") - 1))
-                 .alias("pos"))
-             .distinct())
-    posw = (base.select("doc_id",
-                        F.posexplode("w").alias("p0", "word"))
-            .select("doc_id", (F.col("p0") + 1).alias("pos"),
-                    F.length("word").alias("wlen")))
-    dchars = (cover.join(posw, ["doc_id", "pos"])
-              .groupBy("doc_id", "n")
-              .agg(F.sum("wlen").alias("dup_chars")))
-    tw = topn.groupBy("doc_id").agg(
-        *[F.coalesce(F.max(F.when(F.col("n") == n, F.col("top_chars"))),
-                     F.lit(0)).alias(f"top{n}_chars")
-          for n in GOPHER_TOP_NS])
-    dw = dchars.groupBy("doc_id").agg(
-        *[F.coalesce(F.max(F.when(F.col("n") == n, F.col("dup_chars"))),
-                     F.lit(0)).alias(f"dup{n}_chars")
-          for n in GOPHER_DUP_NS])
-    joined = (base.select("doc_id", "n_chars")
-              .join(tw, "doc_id", "left").join(dw, "doc_id", "left"))
+def _ngram_repetition_batches(it):
+    """``mapInPandas`` body: :func:`ngram_repetition_row` per document."""
+    drop_zip_finders()
+    import pandas as pd
 
-    def frac(chars_col: str) -> F.Column:
-        return F.when(
-            F.col("n_chars") > 0,
-            F.round(F.coalesce(F.col(chars_col), F.lit(0)).cast("double")
-                    / F.col("n_chars"), 6)).otherwise(F.lit(0.0))
+    cols = _NGRAM_COLS + ["ngram_pass"]
+    for pdf in it:
+        rows = [ngram_repetition_row(t) for t in pdf["text"].values]
+        out = pd.DataFrame(rows, columns=cols)
+        out.insert(0, "doc_id", pdf["doc_id"].values)
+        yield out
 
-    frac_cols = ([frac(f"top{n}_chars").alias(f"top{n}_frac")
-                  for n in GOPHER_TOP_NS]
-                 + [frac(f"dup{n}_chars").alias(f"dup{n}_frac")
-                    for n in GOPHER_DUP_NS])
-    gated = joined.select("doc_id", *frac_cols)
-    fails = [F.col(f"top{n}_frac") > GOPHER_TOP_MAX[n]
-             for n in GOPHER_TOP_NS]
-    fails += [F.col(f"dup{n}_frac") > GOPHER_DUP_MAX[n]
-              for n in GOPHER_DUP_NS]
-    pred = fails[0]
-    for f in fails[1:]:
-        pred = pred | f
-    return (gated.withColumn("ngram_pass", (~pred).cast("int"))
+
+def q_ngram_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gopher's word-n-gram repetition gate, the grain `doc_repetition`
+    (lines) doesn't cover: :func:`ngram_repetition_row` of every
+    document, in one Python stage. A document is one row, so no gram
+    leaves its task: the plan has no shuffle besides ``widen``'s and the
+    final sort's."""
+    schema = ", ".join(["doc_id long"]
+                       + [f"{c} double" for c in _NGRAM_COLS]
+                       + ["ngram_pass int"])
+    return (widen(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+            .select("doc_id", "text")
+            .mapInPandas(_ngram_repetition_batches, schema)
             .orderBy("doc_id"))
 
 

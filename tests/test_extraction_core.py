@@ -29,9 +29,10 @@ from document_converter_api_spark.extraction.postformat import (
     sanitize_filename,
 )
 from document_converter_api_spark.extraction.sniff import sniff_content_type
-from document_converter_api_spark.operators.extract import (
-    _drop_zip_finders,
-    extract_arrow_batches,
+from document_converter_api_spark.functions.pystage import drop_zip_finders
+from document_converter_api_spark.operators.extract import extract_arrow_batches
+from document_converter_api_spark.operators.text_analysis import (
+    _ngram_repetition_batches,
 )
 from fixtures.genpages import build_minimal_pdf
 
@@ -578,8 +579,8 @@ def _zip_finder_paths() -> list[str]:
 
 
 class TestZipFinderPruning:
-    """The extraction stage drops the cached zip-archive finders at the
-    head of every task, so the worker's per-task import-cache invalidation
+    """The extraction and n-gram repetition stages drop the cached
+    zip-archive finders at the head of every task, so the worker's per-task import-cache invalidation
     has no archive directory to re-read; imports through the archive keep
     working because the import system rebuilds the finder on demand."""
 
@@ -605,20 +606,29 @@ class TestZipFinderPruning:
     def test_drop_keeps_imports_through_the_archive_working(self,
                                                             zip_on_path):
         path_before = list(sys.path)
-        _drop_zip_finders()
+        drop_zip_finders()
         assert _zip_finder_paths() == []
         assert sys.path == path_before
         assert "zfp_a" in sys.modules
         assert importlib.import_module("zfp_b").VALUE == "b"
         assert importlib.import_module("zfp_pkg.mod").VALUE == "pkg"
 
-    def test_each_task_starts_by_dropping_them(self, zip_on_path):
-        batch = pa.RecordBatch.from_pydict(
-            {"url": ["u.html"],
-             "html": [f"<html><body><main><p>{MAIN}</p></main></body></html>"
-                      .encode()],
-             "lang": ["en"], "content_type": ["html"],
-             "partition_id": pa.array([0], pa.int32())})
-        out = list(extract_arrow_batches(iter([batch])))
-        assert out[0].column("markdown").to_pylist() == [MAIN]
+    @pytest.mark.parametrize("stage", ["extract_arrow_batches",
+                                       "ngram_repetition_batches"])
+    def test_each_task_starts_by_dropping_them(self, zip_on_path, stage):
+        if stage == "extract_arrow_batches":
+            batch = pa.RecordBatch.from_pydict(
+                {"url": ["u.html"],
+                 "html": [f"<html><body><main><p>{MAIN}</p></main>"
+                          "</body></html>".encode()],
+                 "lang": ["en"], "content_type": ["html"],
+                 "partition_id": pa.array([0], pa.int32())})
+            out = list(extract_arrow_batches(iter([batch])))
+            assert out[0].column("markdown").to_pylist() == [MAIN]
+        else:
+            import pandas as pd
+            pdf = pd.DataFrame({"doc_id": [7], "text": ["a b a b a b"]})
+            out = list(_ngram_repetition_batches(iter([pdf])))
+            assert out[0]["doc_id"].tolist() == [7]
+            assert out[0]["top2_frac"].tolist() == [0.818182]
         assert _zip_finder_paths() == []

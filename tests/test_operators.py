@@ -4,6 +4,7 @@ decode/resize/frame-sample, streaming AvailableNow, dedup recall."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -1278,8 +1279,9 @@ class TestDsirSelect:
 class TestNgramRepetition:
     """Gopher word-gram repetition gate: a doc stamped with one repeated
     phrase must fail the paper thresholds, a diverse doc must pass, the
-    char fractions must be exact integer-sum ratios, and the plan must
-    be explode+agg — no window."""
+    char fractions must be exact integer-sum ratios, and each document's
+    signals must be computed inside its row: one Python map stage, no
+    gram shuffle."""
 
     def _write(self, spark, tmp_path, rows):
         spark.createDataFrame(
@@ -1358,18 +1360,17 @@ class TestNgramRepetition:
             assert out[d].top2_frac == 0.0 and out[d].dup10_frac == 0.0
             assert out[d].ngram_pass == 1
 
-    def test_plan_single_explode_no_window(self, spark):
+    def test_plan_one_python_stage_no_shuffle_by_doc(self, spark):
         from .test_plans import plan_of
         from document_converter_api_spark.operators.text_analysis import (
             q_ngram_repetition,
         )
         plan = plan_of(q_ngram_repetition(spark, "/root/testdata/sf0.001"))
-        # gram explode x2 references (counts + occurrence side), the
-        # covered-position explode, and posexplode (4 explode sites,
-        # each named ~2x in the formatted plan) — but never a window
-        # (the duplicate mark is the two-phase groupBy+join, span_dedup
-        # style) and never a cartesian product
-        assert plan.count("Generate") <= 12, plan
+        # the only exchanges are widen's round robin and the final sort's
+        # range partitioning: no gram is exploded, shuffled or rejoined
+        assert len(set(re.findall(r"MapInPandas \(\d+\)", plan))) == 1, plan
+        assert "hashpartitioning" not in plan, plan
+        assert "Generate" not in plan, plan
         assert "windowspecdefinition" not in plan, plan
         assert "CartesianProduct" not in plan, plan
 
@@ -1443,43 +1444,26 @@ class TestDedupWeights:
 
 class TestNgramRepetitionDifferential:
     """Randomized differential test: 60 seeded random docs (varied
-    repetition structure, empties, singles, unicode) must agree with an
-    INDEPENDENT pure-Python implementation of the Gopher signals —
-    catching semantics drift the planted fixtures can't."""
+    repetition structure, empties, singles, unicode), one rounding tie
+    and one null text must agree with the DuckDB oracle, an independent
+    implementation of the Gopher signals — catching semantics drift the
+    planted fixtures can't."""
 
-    @staticmethod
-    def _py_reference(text):
-        import collections
-        n_chars = len(text)
-        w = text.split(" ")
-        out = {}
-        for n in range(2, 11):
-            grams = [" ".join(w[i:i + n]) for i in range(len(w) - n + 1)]
-            cnt = collections.Counter(grams)
-            if not cnt:
-                out[f"top{n}"] = 0.0 if n <= 4 else None
-                out[f"dup{n}"] = 0.0 if n >= 5 else None
-                continue
-            if n <= 4:
-                cmax = max(cnt.values())
-                cov = max(c * len(g) for g, c in cnt.items() if c == cmax)
-                out[f"top{n}"] = round(cov / n_chars, 6) if n_chars else 0.0
-            else:
-                covered = set()
-                for i, g in enumerate(grams):
-                    if cnt[g] >= 2:
-                        covered.update(range(i, i + n))
-                chars = sum(len(w[p]) for p in covered)
-                out[f"dup{n}"] = (round(chars / n_chars, 6)
-                                  if n_chars else 0.0)
-        return out
+    # 43 distinct two-letter words: 128 chars, every 2-gram occurs once
+    # with length 5, so top2_frac = 5/128 = 0.0390625 exactly — Spark and
+    # DuckDB round it HALF_UP to 0.039063, Python's round() to 0.039062
+    TIE = " ".join([a + b for a in "abcdefg" for b in "abcdefg"][:43])
 
-    def test_random_docs_match_python_reference(self, spark, tmp_path):
+    def test_random_docs_match_oracle(self, spark, tmp_path):
         import random
 
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
         from document_converter_api_spark.operators.text_analysis import (
-            q_ngram_repetition,
+            TEXT_ORACLES, q_ngram_repetition,
         )
+        from tools.check_oracle import check_parity, connect
         rng = random.Random(20260818)
         vocab = ([f"w{i}" for i in range(12)]
                  + ["日本", "données", "a", "longerword"]
@@ -1501,22 +1485,17 @@ class TestNgramRepetitionDifferential:
                         words[pos:pos] = phrase
                 text = " ".join(words)
             rows.append((d, text, "en", "s", len(text)))
-        spark.createDataFrame(
-            rows, "doc_id long, text string, lang string, source string,"
-            " n_chars long"
-        ).write.parquet(str(tmp_path / "documents.parquet"))
-        got = {r.doc_id: r
-               for r in q_ngram_repetition(spark, str(tmp_path)).collect()}
-        assert len(got) == 60
-        for d, text, *_ in rows:
-            exp = self._py_reference(text)
-            r = got[d]
-            for n in (2, 3, 4):
-                assert r[f"top{n}_frac"] == (exp[f"top{n}"] or 0.0), (
-                    d, n, text, r)
-            for n in range(5, 11):
-                assert r[f"dup{n}_frac"] == (exp[f"dup{n}"] or 0.0), (
-                    d, n, text, r)
+        assert len(self.TIE) == 128 and len(set(self.TIE.split(" "))) == 43
+        rows.append((60, self.TIE, "en", "s", 128))
+        rows.append((61, None, "en", "s", 0))   # null text reads as ""
+        # one parquet file, the shape DuckDB's view over the path reads
+        cols = ("doc_id", "text", "lang", "source", "n_chars")
+        pq.write_table(pa.table(dict(zip(cols, map(list, zip(*rows))))),
+                       str(tmp_path / "documents.parquet"))
+        out = q_ngram_repetition(spark, str(tmp_path))
+        cur = connect(str(tmp_path)).execute(TEXT_ORACLES["ngram_repetition"])
+        assert check_parity(out, cur) == 62
+        assert out.filter("doc_id = 60").first().top2_frac == 0.039063
 
 
 class TestLogregTrain:

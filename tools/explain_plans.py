@@ -272,13 +272,12 @@ def main() -> None:
          "spread corpus-hot boilerplate lines across their docs; per-doc "
          "re-agg on uniform doc_id; integer math until two final "
          "divisions."),
-        ("ngram_repetition", "Gopher word-gram repetition gate: ONE "
-         "explode builds all nine (n, gram, start) families; the count "
-         "shuffle keys on (doc_id, n, gram) so corpus-hot grams spread "
-         "across docs; most-frequent coverage via max(struct) argmax; "
-         "duplicated grams rejoin occurrences two-phase and DISTINCT "
-         "their covered positions (overlaps counted once); integer char "
-         "sums, one division per n at the end — no window."),
+        ("ngram_repetition", "Gopher word-gram repetition gate: one "
+         "MapInPandas stage computes all nine signals of a document "
+         "inside its row (a Counter per n, a covered-position set for "
+         "the duplicated grams, HALF_UP rounding); the only exchanges "
+         "are widen's round robin and the final sort's range "
+         "partitioning — no hashpartitioning, no Generate."),
         ("bpe_pair_stats", "BPE-training inner loop: zip_with pair build "
          "(O(words)), one map-side-combinable groupBy (vocabulary-sized "
          "shuffle), TakeOrderedAndProject top-k."),
