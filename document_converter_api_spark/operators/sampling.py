@@ -47,11 +47,16 @@ Every operator has a DuckDB twin with identical constants in
 
 from __future__ import annotations
 
+import math
+from functools import partial
+from hashlib import md5
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.expressions import words, words_sql
+from ..functions.pystage import drop_zip_finders
 from .scan import widen
 
 # ---------------------------------------------------------------------------
@@ -305,12 +310,57 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 DSIR_BUCKETS = 64
 DSIR_TARGET_SOURCES = ("src0", "src1", "src2")
 DSIR_K = 100           # selection budget at fixture scale
-_Q20 = 1048576.0       # 2^20: the fixed-point quantum for log-space weights
+_Q20 = 1048576         # 2^20: the fixed-point grid of log-space weights
 
+# bucket_bag's rule in DuckDB SQL, for the oracles
 _DSIR_BUCKET_SQL = (
     "CAST(((instr('0123456789abcdef', substring(md5(tok), 1, 1)) - 1) * 16"
     " + (instr('0123456789abcdef', substring(md5(tok), 2, 1)) - 1))"
     f" % {DSIR_BUCKETS} AS INT)")
+
+
+def bucket_bag(text: str | None) -> list[int]:
+    """A document's token count per bucket. Tokens are ``(text or
+    "").split(" ")``, empty ones kept as ``str_split`` keeps them; a
+    token's bucket is the first md5 byte of its UTF-8 bytes, mod 64."""
+    bag = [0] * DSIR_BUCKETS
+    for tok in (text or "").split(" "):
+        bag[md5(tok.encode()).digest()[0] % DSIR_BUCKETS] += 1
+    return bag
+
+
+def _bucket_bag_batches(it):
+    """``mapInPandas`` body: :func:`bucket_bag` per document."""
+    drop_zip_finders()
+    for pdf in it:
+        pdf["bag"] = [bucket_bag(t) for t in pdf.pop("text").values]
+        yield pdf
+
+
+def bucket_bags(docs: DataFrame) -> DataFrame:
+    """``(doc_id, source, bag array<int>)``: one :func:`bucket_bag` row per
+    document, computed in one Python stage."""
+    return (widen(docs).select("doc_id", "source", "text")
+            .mapInPandas(_bucket_bag_batches,
+                         "doc_id long, source string, bag array<int>"))
+
+
+def _fold_task(width: int, add, rows):
+    """``mapPartitions`` body of :func:`fold_bags`: one task's partial."""
+    drop_zip_finders()
+    acc = [0] * width
+    for row in rows:
+        add(acc, row)
+    yield acc
+
+
+def fold_bags(rows, width: int, add) -> list[int]:
+    """Sum ``width`` integers over an RDD's rows: each task folds its rows
+    into one partial vector with ``add(acc, row)`` and the driver adds
+    the partials (MLlib's ``treeAggregate`` shape at depth 1), so a pass
+    moves one short vector per task and never a document-keyed row."""
+    parts = rows.mapPartitions(partial(_fold_task, width, add)).collect()
+    return [sum(col) for col in zip(*parts)] if parts else [0] * width
 
 
 def _draw52_sql(salt: str) -> str:
@@ -326,6 +376,14 @@ def _draw52_sql(salt: str) -> str:
         ) + ") + 0.5) / 4503599627370496.0")
 
 
+def _add_raw_target(acc: list[int], row) -> None:
+    """A bag's raw counts into ``acc[:64]``, target ones into ``acc[64:]``."""
+    tgt = row.source in DSIR_TARGET_SOURCES
+    for b, c in enumerate(row.bag):
+        acc[b] += c
+        acc[DSIR_BUCKETS + b] += c * tgt
+
+
 def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR data selection: score every document by how much more likely
     its hashed-unigram bag is under the TARGET domain's bucket
@@ -338,60 +396,39 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     replacement proportional to ``w`` — one deterministic pass, no
     sequential draws.
 
-    Exactness: the per-bucket log-ratio is quantized to integer multiples
-    of 2^-20 (``floor(x * 2^20 + 0.5)`` — identical in both engines), so
-    each doc's weight is an INTEGER dot product ``sum(count_b * m_b)`` —
-    order-independent and overflow-free (|m| < 2^24, counts < 2^20), and
-    the Gumbel key is the same integer grid. No float SUM ever crosses
-    the comparison — the one residual float op is ``ln`` itself inside
-    the quantization: JVM ``Math.log`` tolerates 1 ulp vs libm, so a
-    log-ratio landing within 1 ulp of a half-integer on the 2^20 grid
-    could floor differently across engines and flip a boundary doc out
-    of the top-K. ``ln`` is bit-identical Spark↔DuckDB on this platform
-    (measured; same precedent as bm25/unigram_logprob), so the gate is
-    stable here; a platform-robust variant would rank on exact rational
-    products of the integer counts instead of quantized logs.
+    Exactness: the driver quantizes each bucket's log-ratio to the 2^-20
+    grid (``floor(x * 2^20 + 0.5)``, libm ``ln`` as in DuckDB), so a doc's
+    weight is an INTEGER dot product ``sum(count_b * m_b)`` and its Gumbel
+    key lies on the same grid. The one residual cross-engine float op is
+    the Gumbel draw's ``ln``: JVM ``Math.log`` tolerates 1 ulp vs libm, so
+    a key within 1 ulp of a half-integer could floor differently and flip
+    a boundary doc out of the top-K; the two agree bit for bit on x86-64
+    Linux (measured; the bm25/unigram_logprob precedent).
 
-    Scale shape (10^12 docs): the bucket distribution is a 64-row
-    map-side-combinable aggregate; per-(doc, bucket) counts key on doc_id
-    (uniform — a corpus-hot token spreads across docs); the 64-row
-    log-ratio table broadcast-joins back; selection is
-    ``TakeOrderedAndProject`` (top-K without a global window or a
-    SinglePartition exchange). At a 10^12-doc budget you'd replace the
-    driver-visible LIMIT with a key threshold (keep iff
-    ``key_q20 > cut``), same plan minus the ordering."""
+    Scale shape: one pass folds the bags (:func:`bucket_bags`) into 128
+    bucket totals per task; each weight is computed inside its row, and
+    selection is ``TakeOrderedAndProject``: no doc_id-keyed shuffle or
+    global window. At a 10^12-doc budget you'd replace the LIMIT with a
+    key threshold (keep iff ``key_q20 > cut``)."""
     b = DSIR_BUCKETS
-    tgt = F.col("source").isin(*DSIR_TARGET_SOURCES)
-    docs = (widen(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-            .select("doc_id", "source", "text"))
-    toks = docs.select(
-        "doc_id", "source",
-        F.explode(F.split(F.coalesce(F.col("text"), F.lit("")), " ", -1))
-        .alias("tok"))
-    tb = toks.withColumn("b", F.expr(_DSIR_BUCKET_SQL))
-    dist = tb.groupBy("b").agg(
-        F.count("*").alias("cr"),
-        F.sum(F.when(tgt, 1).otherwise(0)).alias("ct"))
-    totals = dist.agg(F.sum("cr").alias("t_raw"), F.sum("ct").alias("t_tgt"))
-    # ln((p_target/p_raw)) with add-1 smoothing, as ONE ratio of exact
-    # integer products (< 2^53, so the double math is identical cross-engine)
-    m = (dist.crossJoin(F.broadcast(totals))
-         .select("b", F.floor(
-             F.log(((F.col("ct") + 1.0) * (F.col("t_raw") + float(b)))
-                   / ((F.col("cr") + 1.0) * (F.col("t_tgt") + float(b))))
-             * _Q20 + 0.5).cast("long").alias("m")))
-    db = tb.groupBy("doc_id", "b").agg(F.count("*").alias("c"))
-    w = (db.join(F.broadcast(m), "b")
-         .groupBy("doc_id")
-         .agg(F.sum(F.col("c") * F.col("m")).cast("long").alias("w_q20")))
+    bags = bucket_bags(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    tot = fold_bags(bags.rdd, 2 * b, _add_raw_target)
+    cr, ct = tot[:b], tot[b:]
+    t_raw, t_tgt = sum(cr), sum(ct)
+    # ln(p_target/p_raw) with add-1 smoothing, as ONE ratio of exact
+    # integer products, in the oracle's operation order
+    m = [math.floor(math.log(((t + 1.0) * (t_raw + float(b)))
+                             / ((r + 1.0) * (t_tgt + float(b))))
+                    * _Q20 + 0.5) for r, t in zip(cr, ct)]
+    w_q20 = F.aggregate(
+        F.zip_with("bag", F.array(*map(F.lit, m)),
+                   lambda c, mb: c.cast("long") * mb),
+        F.lit(0).cast("long"), lambda acc, x: acc + x)
     gumbel = -F.log(-F.log(F.expr(_draw52_sql("dsir:"))))
-    keyed = w.withColumn(
-        "key_q20",
-        (F.col("w_q20")
-         + F.floor(gumbel * _Q20 + 0.5).cast("long")).cast("long"))
-    return (keyed.join(docs.select("doc_id", "source"), "doc_id")
-            .select("doc_id", "source", "w_q20", "key_q20",
-                    F.round(F.col("w_q20") / _Q20, 6).alias("logw"))
+    return (bags.select("doc_id", "source", w_q20.alias("w_q20"))
+            .withColumn("key_q20", (F.col("w_q20") + F.floor(
+                gumbel * _Q20 + 0.5).cast("long")).cast("long"))
+            .withColumn("logw", F.round(F.col("w_q20") / _Q20, 6))
             .orderBy(F.desc("key_q20"), F.asc("doc_id"))
             .limit(DSIR_K))
 
@@ -416,7 +453,7 @@ SAMPLING_ORACLES = {
         m AS (
           SELECT b, CAST(floor(ln(((ct + 1.0) * (t_raw + {float(DSIR_BUCKETS)!r}))
                     / ((cr + 1.0) * (t_tgt + {float(DSIR_BUCKETS)!r})))
-                    * {_Q20!r} + 0.5) AS BIGINT) AS m
+                    * {float(_Q20)!r} + 0.5) AS BIGINT) AS m
           FROM dist CROSS JOIN tot),
         db AS (SELECT doc_id, b, count(*) AS c FROM tb GROUP BY doc_id, b),
         w AS (SELECT doc_id, CAST(sum(c * m) AS BIGINT) AS w_q20
@@ -424,11 +461,11 @@ SAMPLING_ORACLES = {
         keyed AS (
           SELECT doc_id, w_q20,
                  CAST(w_q20 + CAST(floor(
-                   (-ln(-ln({_draw52_sql("dsir:")}))) * {_Q20!r} + 0.5)
+                   (-ln(-ln({_draw52_sql("dsir:")}))) * {float(_Q20)!r} + 0.5)
                    AS BIGINT) AS BIGINT) AS key_q20
           FROM w)
         SELECT k.doc_id, d.source, k.w_q20, k.key_q20,
-               round(k.w_q20 / {_Q20!r}, 6) AS logw
+               round(k.w_q20 / {float(_Q20)!r}, 6) AS logw
         FROM keyed k JOIN documents d ON d.doc_id = k.doc_id
         ORDER BY k.key_q20 DESC, k.doc_id ASC
         LIMIT {DSIR_K}

@@ -34,9 +34,14 @@ Both have DuckDB twins with identical constants in ``SEARCH_ORACLES``.
 
 from __future__ import annotations
 
+import math
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .sampling import (_DSIR_BUCKET_SQL, _Q20, DSIR_BUCKETS, bucket_bags,
+                       fold_bags)
 from .scan import widen
 
 # ---------------------------------------------------------------------------
@@ -108,7 +113,7 @@ def _w_of(var: str) -> str:
         f"(instr({_NIB}, substring(md5({var}), {i + 1}, 1)) - 1)"
         f" * {16 ** (4 - i)}"
         for i in range(5))
-    return f"(CAST({b20} AS DOUBLE) / 1048576.0 - 0.5)"
+    return f"(CAST({b20} AS DOUBLE) / {float(_Q20)!r} - 0.5)"
 
 
 SIGMOID_GAIN = 4.0  # mean weight in [-.5,.5) -> logit in [-2, 2)
@@ -204,117 +209,75 @@ SEARCH_ORACLES = {
 
 
 # ---------------------------------------------------------------------------
-# Quality-classifier TRAINING: unrolled logistic-regression gradient descent
+# Quality-classifier TRAINING: logistic-regression gradient descent on bags
 # ---------------------------------------------------------------------------
 
-# Shares the hashed-unigram feature space (64 md5 buckets) and target-domain
-# label with dsir_select (operators/sampling.py) — DSIR reweights toward the
-# target; this TRAINS the fastText/DCLM-style classifier that
-# q_quality_classifier applies at inference.
+# Shares the hashed-unigram bags and the target-domain label with
+# dsir_select (operators/sampling.py): DSIR reweights toward the target,
+# this TRAINS the fastText/DCLM-style classifier of quality_classifier.
 LR_ROUNDS = 3
 LR_TARGET_SOURCES = ("src0", "src1", "src2")
-_Q20 = 1048576  # 2^20 fixed-point grid (the repo-wide exactness idiom)
 
 
-def _floordiv_exact(num, den):
-    """Exact integer floor division as identical integer ops in both
-    engines: ``(a - pmod(a, d)) / d`` with ``pmod = ((a % d) + d) % d``
-    (both engines' ``%`` takes the dividend's sign). The subtraction
-    makes the numerator exactly divisible, so the engine's double
-    division is exact and the BIGINT cast loses nothing."""
-    pm = ((num % den) + den) % den
-    return ((num - pm) / den).cast("long")
+def _add_doc(acc: list[int], row) -> None:
+    """Token count per bucket in ``acc[:64]``, documents in ``acc[64]``."""
+    for b, c in enumerate(row[1]):
+        acc[b] += c
+    acc[DSIR_BUCKETS] += 1
+
+
+def _add_gradient(w: list[int], acc: list[int], row) -> None:
+    """One ``(y, bag)`` row's gradient terms on the 2^-20 grid under ``w``."""
+    y, bag = row
+    z = sum(c * wb for c, wb in zip(bag, w))
+    try:
+        r = 1.0 / (1.0 + math.exp(-(z / _Q20))) - y
+    except OverflowError:  # exp is +inf, as in the JVM and DuckDB: p = 0
+        r = 0.0 - y
+    for b, c in enumerate(bag):
+        if c:
+            acc[b] += math.floor(c * r * _Q20 + 0.5)
 
 
 def q_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed classifier TRAINING as unrolled dataflow: 3 rounds of
-    full-batch logistic-regression gradient descent over hashed-unigram
-    bucket counts, labels = target-domain membership. Returns the 64
-    learned weights. The novelty vs `quality_classifier` (inference with
-    hash-derived weights) is the iterative TRAINING loop — the same
-    unrolled-rounds shape as `domain_pagerank`, with every cross-engine
-    comparison kept exact:
+    """Distributed classifier TRAINING: ``LR_ROUNDS`` rounds of full-batch
+    logistic-regression gradient descent over hashed-unigram bags, labels
+    = target-domain membership; returns the learned weight of each bucket
+    present in the corpus. Every cross-engine comparison stays exact:
 
     * weights live on the integer 2^-20 grid; the per-doc logit is an
-      INTEGER dot product ``sum(c_b * w_b)`` (order-independent) whose
-      /2^20 is an exact power-of-two scale;
-    * the sigmoid is one exp on bit-identical doubles (the
-      bm25/unigram_logprob precedent);
-    * per-(doc, bucket) gradient contributions quantize back to the
-      grid (``floor(c·r·2^20 + .5)``) BEFORE the bucket sum, so gradient
-      accumulation is an integer sum — addition-order-independent, the
-      one thing a naive float gradient reduce can never be;
-    * the learning-rate step is an exact integer floor division by
-      n_docs (lr = 1/N, the classic full-batch scaling).
+      INTEGER dot product ``sum(c_b * w_b)``, scaled by exactly 2^-20;
+    * the sigmoid is one libm ``exp`` (DuckDB's), exactly 0.5 in round 1;
+    * per-(doc, bucket) gradient terms quantize to the grid
+      (``floor(c·r·2^20 + .5)``) BEFORE the bucket sum, so accumulation
+      is an addition-order-independent integer sum;
+    * the step is an exact integer floor division by n_docs (lr = 1/N).
 
-    Scale shape: per round, ONE doc_id-keyed shuffle pair (logit agg +
-    residual join-back — both on uniform doc_id) and one 64-row bucket
-    aggregate (map-side combinable); the 64-row weight table broadcasts
-    back. Counts are computed once and kept in a keyed-swap cache
-    (scalar columns only). Rounds unroll in the plan (3 nested scans of
-    the cached counts); at 100 TB insert a localCheckpoint per round
-    exactly as domain_pagerank does."""
-    from .dedup import _persist_swap
-    from .sampling import _DSIR_BUCKET_SQL
-
-    docs = (widen(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-            .select("doc_id", "source", "text"))
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(F.coalesce(F.col("text"), F.lit("")), " ", -1))
-        .alias("tok"))
-    tb = _persist_swap(
-        "logreg_tb",
-        toks.withColumn("b", F.expr(_DSIR_BUCKET_SQL))
-        .groupBy("doc_id", "b").agg(F.count("*").alias("c")))
-    y = _persist_swap(
-        "logreg_y",
-        docs.select("doc_id",
-                    F.when(F.col("source").isin(*LR_TARGET_SOURCES), 1)
-                    .otherwise(0).alias("y")))
-    n1 = docs.agg(F.count("*").alias("n"))
-
-    def grad(residuals: DataFrame) -> DataFrame:
-        """residuals: (doc_id, r double) -> (b, g) integer-grid sums."""
-        return (tb.join(residuals, "doc_id")
-                .select("b", F.floor(F.col("c") * F.col("r") * _Q20 + 0.5)
-                        .cast("long").alias("cq"))
-                .groupBy("b").agg(F.sum("cq").alias("g")))
-
-    # round 1: w=0 -> p=0.5 exactly -> r = 0.5 - y (exact halves)
-    g = grad(y.select("doc_id", (F.lit(0.5) - F.col("y")).alias("r")))
-    w = (g.crossJoin(F.broadcast(n1))
-         .select("b", (-_floordiv_exact(F.col("g"), F.col("n")))
-                 .alias("w_q20")))
-    for _ in range(LR_ROUNDS - 1):
-        z = (tb.join(F.broadcast(w), "b")
-             .groupBy("doc_id")
-             .agg(F.sum(F.col("c") * F.col("w_q20")).alias("zint")))
-        res = (y.join(z, "doc_id", "left")
-               .select("doc_id",
-                       (F.lit(1.0)
-                        / (F.lit(1.0)
-                           + F.exp(-(F.coalesce("zint", F.lit(0))
-                                     .cast("double") / _Q20)))
-                        - F.col("y")).alias("r")))
-        g = grad(res)
-        w = (w.join(g, "b", "left").crossJoin(F.broadcast(n1))
-             .select("b", (F.col("w_q20")
-                           - _floordiv_exact(
-                               F.coalesce("g", F.lit(0)).cast("long"),
-                               F.col("n"))).alias("w_q20")))
-    return (w.select("b", "w_q20",
-                     (F.col("w_q20").cast("double") / _Q20).alias("w"))
-            .orderBy("b"))
+    Scale shape: the bags (:func:`bucket_bags`) are cached for the
+    query's passes and unpersisted before it returns. One pass counts
+    documents and tokens per bucket; each round is one more pass with the
+    64 weights in its closure (:func:`fold_bags`), moving 64 integers per
+    task to the driver and never a document-keyed row."""
+    yb = (bucket_bags(spark.read.parquet(f"{sf_dir}/documents.parquet")).rdd
+          .map(lambda r: (int(r.source in LR_TARGET_SOURCES), r.bag))
+          .cache())
+    try:
+        *tokens, n = fold_bags(yb, DSIR_BUCKETS + 1, _add_doc)
+        w = [0] * DSIR_BUCKETS
+        for _ in range(LR_ROUNDS if n else 0):  # no documents, no gradient
+            g = fold_bags(yb, DSIR_BUCKETS, partial(_add_gradient, w))
+            w = [wb - gb // n for wb, gb in zip(w, g)]
+    finally:
+        yb.unpersist()
+    return spark.createDataFrame(
+        [(b, w[b], w[b] / _Q20) for b in range(DSIR_BUCKETS) if tokens[b]],
+        "b int, w_q20 long, w double")
 
 
 def _logreg_oracle() -> str:
-    from .sampling import _DSIR_BUCKET_SQL
-
     tgt = str(LR_TARGET_SOURCES)
     fd = ("CAST((({g}) - (((({g}) % n) + n) % n)) / n AS BIGINT)")
     rounds = []
-    prev = None
     for k in range(1, LR_ROUNDS):
         rounds.append(f"""
     z{k} AS (
@@ -333,7 +296,6 @@ def _logreg_oracle() -> str:
       SELECT w.b,
              w.w_q20 - {fd.format(g=f"coalesce(g.g, 0)")} AS w_q20
       FROM w{k} w LEFT JOIN g{k + 1} g USING (b) CROSS JOIN nn)""")
-        prev = k + 1
     return f"""
     WITH docs AS (
       SELECT doc_id, source, coalesce(text, '') AS text FROM documents),
@@ -357,7 +319,7 @@ def _logreg_oracle() -> str:
       FROM g1 CROSS JOIN nn),{",".join(rounds)}
     SELECT b, CAST(w_q20 AS BIGINT) AS w_q20,
            CAST(w_q20 AS DOUBLE) / {_Q20} AS w
-    FROM w{prev} ORDER BY b
+    FROM w{LR_ROUNDS} ORDER BY b
 """
 
 

@@ -31,6 +31,9 @@ from document_converter_api_spark.extraction.postformat import (
 from document_converter_api_spark.extraction.sniff import sniff_content_type
 from document_converter_api_spark.functions.pystage import drop_zip_finders
 from document_converter_api_spark.operators.extract import extract_arrow_batches
+from document_converter_api_spark.operators.sampling import (
+    _bucket_bag_batches, _fold_task, bucket_bag,
+)
 from document_converter_api_spark.operators.text_analysis import (
     _ngram_repetition_batches,
 )
@@ -579,10 +582,11 @@ def _zip_finder_paths() -> list[str]:
 
 
 class TestZipFinderPruning:
-    """The extraction and n-gram repetition stages drop the cached
-    zip-archive finders at the head of every task, so the worker's per-task import-cache invalidation
-    has no archive directory to re-read; imports through the archive keep
-    working because the import system rebuilds the finder on demand."""
+    """The extraction, n-gram repetition and bag stages, and the bag
+    folds, drop the cached zip-archive finders at the head of every task,
+    so the worker's per-task import-cache invalidation has no archive
+    directory to re-read; imports through the archive keep working
+    because the import system rebuilds the finder on demand."""
 
     @pytest.fixture
     def zip_on_path(self, tmp_path):
@@ -614,7 +618,8 @@ class TestZipFinderPruning:
         assert importlib.import_module("zfp_pkg.mod").VALUE == "pkg"
 
     @pytest.mark.parametrize("stage", ["extract_arrow_batches",
-                                       "ngram_repetition_batches"])
+                                       "ngram_repetition_batches",
+                                       "bucket_bag_batches", "fold_task"])
     def test_each_task_starts_by_dropping_them(self, zip_on_path, stage):
         if stage == "extract_arrow_batches":
             batch = pa.RecordBatch.from_pydict(
@@ -625,10 +630,22 @@ class TestZipFinderPruning:
                  "partition_id": pa.array([0], pa.int32())})
             out = list(extract_arrow_batches(iter([batch])))
             assert out[0].column("markdown").to_pylist() == [MAIN]
-        else:
+        elif stage == "ngram_repetition_batches":
             import pandas as pd
             pdf = pd.DataFrame({"doc_id": [7], "text": ["a b a b a b"]})
             out = list(_ngram_repetition_batches(iter([pdf])))
             assert out[0]["doc_id"].tolist() == [7]
             assert out[0]["top2_frac"].tolist() == [0.818182]
+        elif stage == "bucket_bag_batches":
+            import pandas as pd
+            pdf = pd.DataFrame({"doc_id": [7], "source": ["src0"],
+                                "text": ["a b a"]})
+            out = list(_bucket_bag_batches(iter([pdf])))
+            assert list(out[0].columns) == ["doc_id", "source", "bag"]
+            assert list(out[0]["bag"][0]) == bucket_bag("a b a")
+            assert sum(out[0]["bag"][0]) == 3
+        else:
+            def add(acc, row):
+                acc[0] += row
+            assert list(_fold_task(1, add, iter([2, 3]))) == [[5]]
         assert _zip_finder_paths() == []

@@ -1231,8 +1231,8 @@ class TestSpanDedupTwoPhase:
 class TestDsirSelect:
     """DSIR (Xie et al. 2023) importance resampling: target-domain docs
     must be enriched in the Gumbel-top-K selection, the weight arithmetic
-    must stay on the integer 2^-20 grid, and the plan must select via
-    TakeOrderedAndProject (never a global window)."""
+    must stay on the integer 2^-20 grid, and the plan must be the one bag
+    stage selecting via TakeOrderedAndProject (never a global window)."""
 
     def test_target_sources_enriched(self, spark, tmp_path):
         """Corpus of 400 docs across 4 sources with DISTINCT vocabularies;
@@ -1272,8 +1272,49 @@ class TestDsirSelect:
         plan = plan_of(q_dsir_select(spark, "/root/testdata/sf0.001"))
         assert "TakeOrderedAndProject" in plan, plan
         assert "windowspecdefinition" not in plan, plan
-        # the 64-row log-ratio table joins back via broadcast
-        assert "BroadcastHashJoin" in plan, plan
+        # weights are dot products inside the bag rows: no token is
+        # exploded, and no doc-keyed row is shuffled or joined back
+        assert len(set(re.findall(r"MapInPandas \(\d+\)", plan))) == 1, plan
+        assert "hashpartitioning" not in plan, plan
+        assert "Generate" not in plan, plan
+        assert "Join" not in plan, plan
+
+
+class TestDsirSelectDifferential:
+    """Randomized differential test against the DuckDB oracle, which
+    explodes the tokens and hashes them in SQL: the bag stage's md5 of a
+    token's UTF-8 bytes must put every token in the oracle's bucket,
+    non-ASCII and empty tokens and NULL texts included."""
+
+    def test_random_docs_match_oracle(self, spark, tmp_path):
+        import random
+
+        from document_converter_api_spark.operators.sampling import (
+            _DSIR_BUCKET_SQL, DSIR_K, SAMPLING_ORACLES, q_dsir_select,
+        )
+        from tools.check_oracle import check_parity, connect
+        rng = random.Random(20261019)
+        vocab = ([f"tok{i}" for i in range(300)]
+                 + ["日本語", "café", "ΟΔΟΣ", "İstanbul", "ǅemal", "ﬁle",
+                    ""])                  # "": consecutive spaces
+        rows = []
+        for d in range(240):
+            text = None if d % 7 == 6 else " ".join(
+                rng.choice(vocab) for _ in range(rng.randint(1, 35)))
+            rows.append((d, text, "en", f"src{d % 5}", len(text or "")))
+        spark.createDataFrame(
+            rows, "doc_id long, text string, lang string, source string,"
+            " n_chars long"
+        ).write.parquet(str(tmp_path / "documents.parquet"))
+        con = connect(str(tmp_path))
+        # the tokens reach every bucket, by the oracles' own bucket rule
+        assert con.execute(
+            f"SELECT count(DISTINCT {_DSIR_BUCKET_SQL}) FROM (SELECT unnest("
+            "str_split(coalesce(text, ''), ' ')) AS tok FROM documents)"
+        ).fetchone()[0] == 64
+        out = q_dsir_select(spark, str(tmp_path))
+        cur = con.execute(SAMPLING_ORACLES["dsir_select"])
+        assert check_parity(out, cur) == DSIR_K
 
 
 class TestNgramRepetition:
@@ -1499,9 +1540,9 @@ class TestNgramRepetitionDifferential:
 
 
 class TestLogregTrain:
-    """Unrolled LR training: learned hashed-bucket weights must separate
-    target-domain docs from the rest, and the plan must stay window- and
-    cartesian-free."""
+    """LR training: learned hashed-bucket weights must separate
+    target-domain docs from the rest, and the passes must fold the one
+    bag stage, with no doc-keyed shuffle and no cache left behind."""
 
     def test_learns_to_separate_target_sources(self, spark, tmp_path):
         from hashlib import md5
@@ -1540,77 +1581,74 @@ class TestLogregTrain:
                    + sum(1 for s in other if s <= mid))
         assert correct / len(scores) > 0.9, (correct, mid)
 
-    def test_plan_no_window_no_cartesian(self, spark):
+    def test_plan_one_bag_stage_no_shuffle_by_doc(self, spark,
+                                                  monkeypatch):
         from .test_plans import plan_of
-        from document_converter_api_spark.operators.search import (
-            q_logreg_train,
-        )
-        plan = plan_of(q_logreg_train(spark, "/root/testdata/sf0.001"))
-        assert "windowspecdefinition" not in plan, plan
-        assert "CartesianProduct" not in plan, plan
+        from document_converter_api_spark.operators import sampling, search
+        built = []
+        monkeypatch.setattr(search, "bucket_bags", lambda docs: built.append(
+            sampling.bucket_bags(docs)) or built[-1])
+        persisted = spark.sparkContext._jsc.getPersistentRDDs
+        cached = set(persisted())
+        out = search.q_logreg_train(spark, "/root/testdata/sf0.001")
+        # every pass folds the one bag frame; the weights come back as a
+        # local table, and the bag cache is gone
+        assert len(built) == 1
+        # the folds ran it: keep the initial plan, not the final one too
+        plan = plan_of(built[0]).split("== Initial Plan ==")[-1]
+        assert len(set(re.findall(r"MapInPandas \(\d+\)", plan))) == 1, plan
+        assert "hashpartitioning" not in plan, plan
+        assert "Generate" not in plan, plan
+        assert "Exchange" not in plan_of(out), plan_of(out)
+        assert set(persisted()) == cached
 
 
 class TestLogregTrainDifferential:
-    """Randomized differential test: the learned w_q20 INTEGERS must be
-    byte-equal to an independent pure-Python implementation of the same
-    quantized gradient descent — integer equality, no tolerance."""
+    """Randomized differential tests against the DuckDB oracle, which
+    trains on per-(doc, bucket) rows in unrolled SQL rounds: the learned
+    w_q20 INTEGERS must agree exactly, non-ASCII words included."""
 
-    @staticmethod
-    def _py_train(rows, rounds=3, buckets=64, q=1048576):
-        import math
-        from collections import Counter, defaultdict
-        from hashlib import md5
+    VOCAB = [f"tok{i}" for i in range(40)] + ["日本語", "café"]
 
-        def bucket(tok):
-            return int(md5(tok.encode()).hexdigest()[:2], 16) % buckets
-
-        tb = {}   # doc -> Counter(bucket -> count)
-        y = {}
-        for doc_id, text, _, src, _ in rows:
-            tb[doc_id] = Counter(bucket(t) for t in text.split(" "))
-            y[doc_id] = 1 if src in ("src0", "src1", "src2") else 0
-        n = len(rows)
-        w = defaultdict(int)
-        for k in range(rounds):
-            g = defaultdict(int)
-            for d, counts in tb.items():
-                if k == 0:
-                    r = 0.5 - y[d]
-                else:
-                    zint = sum(c * w[b] for b, c in counts.items())
-                    r = 1.0 / (1.0 + math.exp(-(zint / q))) - y[d]
-                for b, c in counts.items():
-                    g[b] += math.floor(c * r * q + 0.5)
-            for b, gb in g.items():
-                w[b] -= gb // n   # Python // floors: the exact step
-        return dict(w)
-
-    def test_weights_match_python_reference(self, spark, tmp_path):
-        import random
-
+    def _check(self, spark, tmp_path, rows) -> int:
         from document_converter_api_spark.operators.search import (
-            q_logreg_train,
+            SEARCH_ORACLES, q_logreg_train,
         )
-        rng = random.Random(42)
-        vocab = [f"tok{i}" for i in range(40)] + ["日本語", "café"]
-        rows = []
-        for d in range(120):
-            src = f"src{d % 5}"          # src0-2 target, src3-4 not
-            text = " ".join(rng.choice(vocab)
-                            for _ in range(rng.randint(1, 35)))
-            rows.append((d, text, "en", src, len(text)))
+        from tools.check_oracle import check_parity, connect
         spark.createDataFrame(
             rows, "doc_id long, text string, lang string, source string,"
             " n_chars long"
         ).write.parquet(str(tmp_path / "documents.parquet"))
-        got = {r.b: r.w_q20 for r in
-               q_logreg_train(spark, str(tmp_path)).collect()}
-        exp = self._py_train(rows)
-        # buckets with no tokens never appear on either side
-        assert got == {b: w for b, w in exp.items()}, (
-            sorted(set(got) ^ set(exp)),
-            {b: (got.get(b), exp.get(b)) for b in got if
-             got.get(b) != exp.get(b)})
+        cur = connect(str(tmp_path)).execute(SEARCH_ORACLES["logreg_train"])
+        return check_parity(q_logreg_train(spark, str(tmp_path)), cur)
+
+    def test_random_docs_match_oracle(self, spark, tmp_path):
+        import random
+        rng = random.Random(42)
+        rows = []
+        for d in range(120):
+            src = f"src{d % 5}"          # src0-2 target, src3-4 not
+            text = " ".join(rng.choice(self.VOCAB)
+                            for _ in range(rng.randint(1, 35)))
+            rows.append((d, text, "en", src, len(text)))
+        # one row per bucket the 42 words hash to
+        assert self._check(spark, tmp_path, rows) == 29
+
+    def test_long_docs_of_a_minority_target_match_oracle(self, spark,
+                                                         tmp_path):
+        """A 1-in-5 target share and documents of up to 500 tokens put
+        half the round-2 logits below -709, where ``exp(-z)`` overflows a
+        double: the sigmoid must read 0 there (exp = +inf in the JVM and
+        DuckDB), not fail the query."""
+        import random
+        rng = random.Random(7)
+        rows = []
+        for d in range(30):
+            src = "src0" if d % 5 == 0 else "src4"
+            text = " ".join(rng.choice(self.VOCAB)
+                            for _ in range(rng.randint(5, 500)))
+            rows.append((d, text, "en", src, len(text)))
+        assert self._check(spark, tmp_path, rows) == 29
 
 
 class TestSketchDifferential:

@@ -112,3 +112,14 @@ def test_every_query_has_callable_signature():
     # every oracle key must have a query; rows-only queries are allowed
     assert set(ORACLES) <= set(qs)
     assert len(TEXT_QUERIES) >= 43
+
+
+def test_connect_reads_a_table_spark_wrote(spark, tmp_path):
+    """Spark writes a table as a directory of part files; ``connect``'s
+    view over it reads every part."""
+    path = tmp_path / "documents.parquet"
+    spark.range(10).repartition(3).withColumnRenamed("id", "doc_id") \
+        .write.parquet(str(path))
+    assert len(list(path.glob("*.parquet"))) == 3
+    assert connect(str(tmp_path)).execute(
+        "SELECT count(*), sum(doc_id) FROM documents").fetchone() == (10, 45)

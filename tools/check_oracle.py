@@ -64,14 +64,16 @@ def value_hash(cols: list[str], rows: list[tuple]) -> str:
 
 def connect(sf_dir: str):
     """A DuckDB connection with one view per ``TABLES`` parquet found in
-    ``sf_dir``, the names the oracle SQL reads."""
+    ``sf_dir``, the names the oracle SQL reads. A table is one parquet
+    file or, as Spark writes it, a directory of part files."""
     import duckdb
 
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+            src = f"{p}/*.parquet" if os.path.isdir(p) else p
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
     return con
 
 

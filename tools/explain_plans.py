@@ -250,21 +250,17 @@ def main() -> None:
          "cluster-size aggregate (map-side combine collapses even a "
          "mega-cluster to one row per task) + two doc_id-keyed joins; "
          "weight 1/size is the single float op."),
-        ("logreg_train", "classifier training as unrolled dataflow: per "
-         "round one doc_id-keyed shuffle pair (integer-dot logit agg + "
-         "residual join-back) and a 64-row map-side-combining gradient "
-         "agg; the weight table broadcasts back; gradients quantize to "
-         "the 2^-20 grid BEFORE summing, so accumulation is an "
-         "order-independent integer sum."),
         ("weighted_sample", "quality-weighted importance sampling: keep "
          "decision is a scan-stage projection (52-bit exact draw vs "
          "n_chars weight); the only shuffle is the per-language report "
          "agg."),
-        ("dsir_select", "DSIR importance resampling: 64-row hashed-unigram "
-         "bucket distribution broadcast back as integer 2^-20 log-ratios; "
-         "per-doc weight is an integer dot product; Gumbel-top-K selection "
-         "via TakeOrderedAndProject — no global window, no SinglePartition "
-         "exchange."),
+        ("dsir_select", "DSIR importance resampling: one MapInPandas "
+         "stage computes each document's 64-count hashed-unigram bag; a "
+         "pass over the bags, run while the frame is built, returns "
+         "per-task bucket totals, from which the driver computes the 64 "
+         "integer 2^-20 log-ratios; each weight is a dot product inside "
+         "its row, and Gumbel-top-K selection is TakeOrderedAndProject — "
+         "no hashpartitioning, no Generate, no join, no global window."),
         ("length_buckets", "context-length bucketing: codegen'd bucket "
          "CASE + 5-group map-side-combining agg — ~5 partial rows per "
          "map task regardless of corpus size."),
@@ -328,6 +324,15 @@ def main() -> None:
          "output bounded by distinct templates."),
     ):
         add(name, note, queries[name](spark, SF))
+    from document_converter_api_spark.operators.sampling import bucket_bags
+    add("logreg_train",
+        "classifier training: the plan shown is the bag frame (one "
+        "MapInPandas stage, as in dsir_select) that the query caches and "
+        "folds in Python passes. One counts the documents and each "
+        "bucket's tokens; then each round returns 64 integer gradient "
+        "partial sums per task, and the driver steps the 2^-20-grid "
+        "weights. The query returns the weights as a LocalTableScan.",
+        bucket_bags(spark.read.parquet(f"{SF}/documents.parquet")))
 
     # 4) bucketed co-located join: zero Exchange with broadcast disabled
     from document_converter_api_spark.sources.bucketed import bucketed_pair
@@ -446,9 +451,11 @@ def main() -> None:
     out = [
         "# PLANS.md — physical-plan evidence (generated by tools/explain_plans.py)",
         "",
-        f"Scale factor dir: `{SF}`; local[4]; AQE off at explain time "
-        "(plans shown are the static plans Catalyst produces — AQE can only "
-        "improve them at runtime).",
+        f"Scale factor dir: `{SF}`; local[4]; AQE on (Spark's default). "
+        "Each plan is printed before its frame runs, so it is the "
+        "`AdaptiveSparkPlan … isFinalPlan=false` Catalyst produces, which "
+        "AQE may still re-plan at runtime; a cached input that ran while "
+        "the frame was built shows its final plan too.",
         "",
     ]
     for name, note, plan in sections:
