@@ -211,15 +211,6 @@ def _aes_encrypt_words(wks, s0: int, s1: int, s2: int, s3: int):
     )
 
 
-def _aes_encrypt_block(rks: list[bytes], block: bytes) -> bytes:
-    w = _aes_encrypt_words(
-        _words_of_rks(rks),
-        int.from_bytes(block[0:4], "big"), int.from_bytes(block[4:8], "big"),
-        int.from_bytes(block[8:12], "big"),
-        int.from_bytes(block[12:16], "big"))
-    return b"".join(x.to_bytes(4, "big") for x in w)
-
-
 def _aes_decrypt_block(rks: list[bytes], block: bytes) -> bytes:
     nr = len(rks) - 1
     s = bytearray(block)

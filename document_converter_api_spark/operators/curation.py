@@ -359,7 +359,9 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     Three keyed shuffles, all skew-safe: (1) vocab ``groupBy(tok)`` —
     map-side partial agg absorbs hot tokens; (2) per-(doc, tok) counts —
     the doc_id in the key spreads hot tokens across the corpus; (3) per-doc
-    score re-agg on uniform ``doc_id``. The corpus-total is a 1-row
+    score re-agg on uniform ``doc_id``. The total sums the vocab aggregate,
+    so the plan runs the ``groupBy(tok)`` exchange twice (four hash
+    Exchanges in the plan). The corpus-total is a 1-row
     aggregate broadcast via crossJoin (never ``collect``-ed into the plan);
     the vocab join is broadcast here — with an unbounded vocabulary the
     standard split is broadcast top-K + shuffle-join the tail."""

@@ -1271,8 +1271,9 @@ def q_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     band-join candidate pairs), adds one cluster-size aggregate (keyed
     on cluster_id — cluster sizes are bounded by near-dup families, and
     a corpus-wide mega-cluster is exactly the case where the aggregate's
-    map-side combine collapses it to one row per task) and two
-    doc_id-keyed left joins back to the full corpus. The weight is the
+    map-side combine collapses it to one row per task), a doc_id-keyed
+    left join of the labels onto the full corpus and a cluster_id-keyed
+    left join of the sizes. The weight is the
     single float op: ``1/size`` is a correctly-rounded IEEE division of
     exact integers in both engines."""
     corpus = _corpus(spark, sf_dir).select("doc_id")

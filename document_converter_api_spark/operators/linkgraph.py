@@ -266,7 +266,9 @@ def q_frontier_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale notes (10^12 pages): the anti-join keys BOTH sides on the
     url hash — one co-partitioned Exchange pair, sort-merge anti, no
-    broadcast needed or possible at that size; candidates arrive
+    broadcast needed or possible at that size (no hint is given: at
+    fixture size auto-broadcast plans a BroadcastHashJoin LeftAnti
+    instead); candidates arrive
     pre-shrunk by the ``distinct`` (itself map-side partial). Nothing
     ever carries body bytes — url strings only."""
     pages = _pages_df(spark)

@@ -1,4 +1,4 @@
-"""Multimodal binary-column operators: decode, feature-extract, resize,
+"""Multimodal binary-column operators: decode, feature-extract,
 frame-sample — the Spark plumbing a 100 TB multimodal training pipeline
 needs around opaque image/audio/video payloads.
 
@@ -104,35 +104,6 @@ def decode_meta_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(out)
 
 
-RESIZE_SCHEMA = "media_id long, out_width int, out_height int, out_digest string"
-
-
-def resize_image_batches(target_w: int, target_h: int):
-    """Nearest-neighbour resize on RAW1 rasters (real pixel math on the
-    deterministic fake; Pillow branch stubbed per module docstring)."""
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in it:
-            ids, ws, hs, digs = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    w, h, c, raster = _parse_image(payload)
-                    arr = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, c)
-                    yi = (np.arange(target_h) * h // target_h)
-                    xi = (np.arange(target_w) * w // target_w)
-                    small = arr[yi][:, xi]
-                    digest = hashlib.md5(small.tobytes()).hexdigest()
-                except Exception:  # noqa: BLE001
-                    continue
-                ids.append(mid)
-                ws.append(target_w)
-                hs.append(target_h)
-                digs.append(digest)
-            yield pd.DataFrame({"media_id": ids, "out_width": ws,
-                                "out_height": hs, "out_digest": digs})
-    return fn
-
-
 AUDIO_FEAT_SCHEMA = ("media_id long, duration_ms double, mean_amp double, "
                      "rms_amp double")
 
@@ -230,8 +201,6 @@ def q_multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_features_batches, AUDIO_FEAT_SCHEMA)
     return out.orderBy("media_id")
 
-
-MEDIA_PATH_SQL = "'__MEDIA_PARQUET__'"  # substituted by oracle builder
 
 MULTIMODAL_ORACLES = {
     # ground-truth check: decode(payload) == planted meta JSON

@@ -114,10 +114,12 @@ def q_robots_precedence(spark: SparkSession, sf_dir: str) -> DataFrame:
     specific Allow permits).
 
     Plan shape: the directive table is hosts × a handful of rows →
-    broadcast join against the fetch log (which never shuffles); the
-    per-url winner is one ``max(struct(len, is_allow))`` aggregate —
-    struct ordering encodes longest-then-Allow exactly; then one
-    map-side-combined host rollup."""
+    broadcast join against the fetch log (which does not shuffle for
+    it); the per-url winner is one ``max(struct(len, is_allow))``
+    aggregate — struct ordering encodes longest-then-Allow exactly —
+    left-joined back to the fetch log on (host, url), a sort-merge join
+    that shuffles both sides once; then one map-side-combined host
+    rollup."""
     rows = all_pages_df(spark)
     robots = (rows.filter(F.col("url").endswith("/robots.txt"))
               .select(F.regexp_extract("url", HOST_RE, 1).alias("host"),

@@ -36,9 +36,11 @@ Scale notes:
   (suffix pushdown keeps the page scan pruned), and the explode fans
   out to ~|urlset| rows per host.
 * Coverage/freshness join parsed locs against the crawl log keyed on
-  full url — both sides hash-partition once; no broadcast needed and
-  none assumed (the urlset side is 10^10+ at scale). The per-host
-  aggregation partial-combines map-side.
+  full url with no join hint: auto-broadcast picks the strategy. At
+  fixture size the join is a BroadcastHashJoin with no hash Exchange;
+  at scale (the urlset side is 10^10+) it becomes a shuffle join in
+  which both sides hash-partition once. The per-host aggregation
+  partial-combines map-side.
 * lastmod accepts both W3C Datetime forms sitemaps.org allows (full
   timestamp and date-only) via ``try_to_timestamp`` — a malformed value
   yields NULL even under Spark 4's default ANSI mode (never a task

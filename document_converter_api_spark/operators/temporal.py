@@ -17,14 +17,16 @@ Scale notes per operator:
   and take ``last(value, ignorenulls)`` over a per-key window ordered by
   ``(ts, tag)`` with a ROWS UNBOUNDED PRECEDING frame — the build row in
   effect "carries forward" to every later probe row.  ONE hash Exchange
-  on the join key, one sort, zero row expansion; ties at equal ts
-  resolve build-before-probe so the match predicate is the inclusive
-  ``build.ts <= probe.ts`` ASOF convention.  The build side is first
-  collapsed to one row per (key, ts) with ``max_by`` (ASOF semantics
-  require unique right timestamps per key); that pre-aggregation is
-  map-side combinable.  Skewed keys hurt the window sort exactly like
-  any keyed shuffle — the salting pre-pass in ``operators/skew.py``
-  composes if a key is hot.
+  on the join key, one sort, zero row expansion, no
+  BroadcastNestedLoopJoin; ties at equal ts resolve build-before-probe
+  so the match predicate is the inclusive ``build.ts <= probe.ts`` ASOF
+  convention.  The build side is first collapsed to one row per
+  (key, ts) with ``max_by`` (ASOF semantics require unique right
+  timestamps per key); that pre-aggregation is map-side combinable and
+  shuffles on (key, ts), so ``q_asof_join`` plans two hash Exchanges in
+  all.  Skewed keys hurt the window sort exactly like any keyed
+  shuffle — the salting pre-pass in ``operators/skew.py`` composes if a
+  key is hot.
 * ``range_join`` — the naive interval join is again an inequality join
   (quadratic per key).  Because every window here has FIXED width W, a
   window [s, s+W) overlaps at most two width-W time buckets —

@@ -120,7 +120,10 @@ def q_resume_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_orders_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-style 3-way join + agg: revenue per nation for open orders.
-    customer/nation broadcast-able dims; lineitem-orders sort-merge."""
+    customer/nation broadcast-able dims; no join hint, so auto-broadcast
+    picks the lineitem-orders strategy (a sort-merge join once orders
+    outgrows the broadcast threshold, a broadcast at the test scale
+    factors)."""
     li = _read(spark, sf_dir, "lineitem")
     orders = _read(spark, sf_dir, "orders")
     cust = _read(spark, sf_dir, "customer")
@@ -345,7 +348,9 @@ def q_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5-shaped 5-way join: revenue per region for open orders,
     supplier and customer in the same nation. region/nation/supplier are
-    broadcast-able dims; the lineitem⋈orders fact join shuffles once."""
+    broadcast-able dims; the lineitem⋈orders fact join shuffles once when
+    orders is over the broadcast threshold (auto-broadcast takes it at the
+    test scale factors)."""
     li = _read(spark, sf_dir, "lineitem")
     orders = _read(spark, sf_dir, "orders")
     cust = _read(spark, sf_dir, "customer")
@@ -401,8 +406,9 @@ def q_element_at_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3-shaped: unshipped-revenue per order for one market segment.
     The filtered customer dim broadcasts; lineitem⋈orders is the single
-    fact shuffle; the final top-10 is TakeOrderedAndProject, not a total
-    sort."""
+    fact shuffle once orders is over the broadcast threshold (auto-broadcast
+    takes it at the test scale factors); the final top-10 is
+    TakeOrderedAndProject, not a total sort."""
     li = _read(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate").cast("date") > F.lit("1998-01-01"))
     orders = _read(spark, sf_dir, "orders").filter(

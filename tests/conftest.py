@@ -2,8 +2,10 @@
 
 from __future__ import annotations
 
+import io
 import os
 import sys
+from contextlib import redirect_stdout
 
 import pytest
 
@@ -17,6 +19,15 @@ GOLDENS_SMOKE = os.path.join(FIXTURE_DIR, "goldens_smoke.parquet")
 # The smoke fixture embeds oversize rows at ~300 KB; tests gate at 256 KiB so
 # the size-cap path (app/main.py:484-488) is exercised at fixture scale.
 TEST_MAX_BYTES = 256 * 1024
+
+
+def plan_of(df) -> str:
+    """The frame's ``explain("formatted")`` text: the physical plan the
+    plan-shape tests assert on and print when they fail."""
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
 
 
 @pytest.fixture(scope="session")

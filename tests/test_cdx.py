@@ -5,9 +5,7 @@ shard assigner)."""
 
 from __future__ import annotations
 
-import io
 import re
-from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
 
@@ -20,6 +18,8 @@ from document_converter_api_spark.operators.cdx import (
     q_cdx_shards,
     surt_key,
 )
+
+from .conftest import plan_of
 
 
 def _surt(spark, url: str) -> str:
@@ -102,15 +102,8 @@ def test_revisit_audit_invariants(spark):
         assert r["bytes_saved"] == (want[d] - 1) * lengths[d]
 
 
-def _plan_of(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
 def test_record_builder_is_shuffle_free(spark):
-    plan = _plan_of(cdx_records(_captures(spark)))
+    plan = plan_of(cdx_records(_captures(spark)))
     assert "Exchange" not in plan, (
         "SURT/mime/digest projection must stay in the scan stage")
     assert "Python" not in plan and "Arrow" not in plan, (
@@ -118,7 +111,7 @@ def test_record_builder_is_shuffle_free(spark):
 
 
 def test_shard_window_runs_on_host_table_not_pages(spark):
-    plan = _plan_of(q_cdx_shards(spark, ""))
+    plan = plan_of(q_cdx_shards(spark, ""))
     # the running-offset Window must run over the HOST table (10^4x
     # reduction), never directly over raw capture rows. Since the
     # prefix sum localCheckpoints the range-partitioned host frame,

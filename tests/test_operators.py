@@ -1,5 +1,5 @@
 """Tests for training-data operators: skew-salted aggregation, multimodal
-decode/resize/frame-sample, streaming AvailableNow, dedup recall."""
+decode/frame-sample, streaming AvailableNow, dedup recall."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from .conftest import PAGES_SMOKE
+from .conftest import PAGES_SMOKE, plan_of
 
 
 class TestSkew:
@@ -85,20 +85,6 @@ class TestMultimodal:
             else:
                 assert (d.n_frames, d.width, d.height) == (
                     meta["n_frames"], meta["width"], meta["height"])
-
-    def test_resize_deterministic(self, spark, media):
-        from document_converter_api_spark.operators.multimodal import (
-            RESIZE_SCHEMA, resize_image_batches,
-        )
-        imgs = media.filter(F.col("kind") == "image")
-        out1 = (imgs.mapInPandas(resize_image_batches(8, 8), RESIZE_SCHEMA)
-                .orderBy("media_id").collect())
-        out2 = (imgs.repartition(7).mapInPandas(resize_image_batches(8, 8),
-                                                RESIZE_SCHEMA)
-                .orderBy("media_id").collect())
-        assert out1 == out2
-        assert all(r.out_width == 8 and r.out_height == 8 for r in out1)
-        assert len(out1) == imgs.count()
 
     def test_frame_sample_counts(self, spark, media):
         import json
@@ -363,7 +349,6 @@ class TestSemanticDedup:
         at K=64 carries 64×DIM centroid literals and dwarfs it — and the
         K=64 arrow query actually runs with every vector assigned to a
         valid centroid."""
-        from .test_plans import plan_of
         from document_converter_api_spark.operators import dedup as D
         p16 = plan_of(D.q_semantic_dedup(spark, self.SF))
         p64 = plan_of(D.q_semantic_dedup(spark, self.SF, k_centroids=64))
@@ -727,7 +712,6 @@ class TestAnnBroadcastCodebook:
         per-centroid expressions), while the literal plan at a mere K=64
         is already bigger than the arrow plan at K=1024 — and the K=1024
         arrow query actually runs."""
-        from .test_plans import plan_of
         from document_converter_api_spark.operators.similarity import q_ann_ivf
         sf = "/root/testdata/sf0.1"  # 2000 vectors >= 1024 centroids
         p16 = plan_of(q_ann_ivf(spark, sf, codebook="arrow"))
@@ -742,7 +726,6 @@ class TestAnnBroadcastCodebook:
         assert all(r["rank"] <= 3 for r in rows)
 
     def test_pq_arrow_plan_flat_at_larger_k(self, spark):
-        from .test_plans import plan_of
         from document_converter_api_spark.operators import similarity as sim
         sf = "/root/testdata/sf0.1"
         p_arrow = plan_of(sim.q_ann_pq(spark, sf, codebooks="arrow"))
@@ -755,7 +738,6 @@ class TestAnnBroadcastCodebook:
         """r2 unioned Q per-query scans; the LUT table now joins once —
         no Union in the plan, exactly one broadcast join of the Q-row LUT."""
         import re
-        from .test_plans import plan_of
         from document_converter_api_spark.operators.similarity import q_ann_pq
         plan = plan_of(q_ann_pq(spark, "/root/testdata/sf0.001"))
         assert "Union" not in plan, plan
@@ -769,11 +751,6 @@ class TestTemporalJoins:
     """Behavioral contracts for operators/temporal.py: inclusive ASOF tie
     semantics, inner-drop of unmatched probes, and the scale-deciding plan
     shapes (one Exchange / equi-join, never a nested-loop join)."""
-
-    @staticmethod
-    def _plan_helpers():
-        from .test_plans import n_exchanges, plan_of
-        return plan_of, n_exchanges
 
     def _frames(self, spark):
         from datetime import datetime as dt
@@ -804,7 +781,7 @@ class TestTemporalJoins:
     def test_asof_plan_one_exchange_no_nlj(self, spark):
         from document_converter_api_spark.operators.temporal import asof_join
         probe, build = self._frames(spark)
-        plan_of, n_exchanges = self._plan_helpers()
+        from .test_plans import n_exchanges
         plan = plan_of(asof_join(probe, build))
         assert n_exchanges(plan) == 1, "union+window asof must shuffle once"
         assert "BroadcastNestedLoopJoin" not in plan
@@ -817,7 +794,6 @@ class TestTemporalJoins:
         from tools.check_oracle import connect
         sf = "/root/testdata/sf0.001"
         df = q_range_join(spark, sf)
-        plan_of, _ = self._plan_helpers()
         plan = plan_of(df)
         assert "BroadcastNestedLoopJoin" not in plan
         assert "CartesianProduct" not in plan
@@ -1167,7 +1143,6 @@ class TestSpanDedupTwoPhase:
     def test_plan_marks_via_semi_join_not_window_over_h(self, spark):
         import re
         import __spark_entry__ as entrymod
-        from .test_plans import plan_of
         plan = plan_of(entrymod.queries()["span_dedup"](
             spark, "/root/testdata/sf0.001"))
         assert "LeftSemi" in plan, plan
@@ -1265,7 +1240,6 @@ class TestDsirSelect:
             assert abs(r.logw - r.w_q20 / 1048576.0) < 5e-7
 
     def test_plan_is_topk_no_global_window(self, spark):
-        from .test_plans import plan_of
         from document_converter_api_spark.operators.sampling import (
             q_dsir_select,
         )
@@ -1402,7 +1376,6 @@ class TestNgramRepetition:
             assert out[d].ngram_pass == 1
 
     def test_plan_one_python_stage_no_shuffle_by_doc(self, spark):
-        from .test_plans import plan_of
         from document_converter_api_spark.operators.text_analysis import (
             q_ngram_repetition,
         )
@@ -1445,7 +1418,6 @@ class TestIncrementalMinhash:
             assert r.est_jaccard == r.sig_agree / 8.0
 
     def test_plan_no_cartesian_no_window(self, spark):
-        from .test_plans import plan_of
         from document_converter_api_spark.operators.dedup import (
             q_incremental_minhash,
         )
@@ -1583,7 +1555,6 @@ class TestLogregTrain:
 
     def test_plan_one_bag_stage_no_shuffle_by_doc(self, spark,
                                                   monkeypatch):
-        from .test_plans import plan_of
         from document_converter_api_spark.operators import sampling, search
         built = []
         monkeypatch.setattr(search, "bucket_bags", lambda docs: built.append(

@@ -543,23 +543,31 @@ class TestEncryptedDecryption:
             pass
 
 
+def _words(block: bytes) -> tuple[int, ...]:
+    return tuple(int.from_bytes(block[i:i + 4], "big") for i in (0, 4, 8, 12))
+
+
 class TestAesPrimitives:
-    """Known-answer vectors pin the cipher core both widths."""
+    """Known-answer vectors pin the cipher core both widths: the word-space
+    encrypt that key derivation runs, and the byte-space block decrypt."""
 
     def test_fips197_c1_aes128(self):
         from document_converter_api_spark.extraction.pdf_crypt import (
-            _aes_decrypt_block, _aes_encrypt_block, _expand_key,
+            _aes_decrypt_block, _aes_encrypt_words, _expand_key,
+            _words_of_rks,
         )
         key = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
         pt = bytes.fromhex("00112233445566778899aabbccddeeff")
         ct = bytes.fromhex("69c4e0d86a7b0430d8cdb78070b4c55a")
         rks = _expand_key(key)
-        assert _aes_encrypt_block(rks, pt) == ct
+        assert _aes_encrypt_words(_words_of_rks(rks), *_words(pt)) == \
+            _words(ct)
         assert _aes_decrypt_block(rks, ct) == pt
 
     def test_fips197_c3_aes256(self):
         from document_converter_api_spark.extraction.pdf_crypt import (
-            _aes_decrypt_block, _aes_encrypt_block, _expand_key,
+            _aes_decrypt_block, _aes_encrypt_words, _expand_key,
+            _words_of_rks,
         )
         key = bytes.fromhex("000102030405060708090a0b0c0d0e0f"
                             "101112131415161718191a1b1c1d1e1f")
@@ -567,7 +575,8 @@ class TestAesPrimitives:
         ct = bytes.fromhex("8ea2b7ca516745bfeafc49904b496089")
         rks = _expand_key(key)
         assert len(rks) == 15
-        assert _aes_encrypt_block(rks, pt) == ct
+        assert _aes_encrypt_words(_words_of_rks(rks), *_words(pt)) == \
+            _words(ct)
         assert _aes_decrypt_block(rks, ct) == pt
 
     def test_u_ue_roundtrip_and_wrong_password(self):

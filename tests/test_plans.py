@@ -4,34 +4,119 @@ These tests pin the *plan shape*, not timings — the properties that decide
 whether the job survives a 1000-executor / 100 TB scale-up:
 column pruning of the binary payload, filter pushdown to the parquet scan,
 broadcast for point lookups, top-k instead of total sort, and exactly one
-shuffle ahead of the Arrow extraction stage.
+shuffle ahead of the Arrow extraction stage. Every pin's failure message
+is the formatted plan; ``df.explain("formatted")`` prints any other.
 """
 
 from __future__ import annotations
 
-import io
-import os
 import re
-from contextlib import redirect_stdout
 
+import pytest
 from pyspark.sql import functions as F
 
-from .conftest import PAGES_SMOKE
+from .conftest import PAGES_SMOKE, plan_of
 
 SF = "/root/testdata/sf0.001"
-
-
-def plan_of(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def n_exchanges(plan: str) -> int:
     # formatted explain repeats node names in the details section — count
     # unique node ids, not string occurrences
     return len(set(re.findall(r"Exchange \(\d+\)", plan)))
+
+
+def n_hash_exchanges(plan: str) -> int:
+    # the keyed shuffles: widen()'s RoundRobinPartitioning, the final
+    # orderBy's rangepartitioning and SinglePartition gathers are not counted
+    return len(re.findall(r"Arguments: hashpartitioning", plan))
+
+
+NO_PYTHON = ("Python", "MapInArrow", "MapInPandas")
+
+# Registry query -> (plan fragments that must appear, fragments that must
+# not, number of hashpartitioning Exchanges), each built at SF. Joins carry
+# no hint unless the query gives one, so at SF auto-broadcast plans the
+# small sides as BroadcastHashJoin; the scale notes in the operators'
+# docstrings say what changes at corpus size.
+PLAN_SHAPES = {
+    # TPC-H shapes: every join broadcasts here, so the one keyed shuffle
+    # is the aggregation's (Q18 pre-aggregates lineitem before any join)
+    "orders_join": (("BroadcastHashJoin",), ("SortMergeJoin",), 1),
+    "region_revenue": (("BroadcastHashJoin",), ("SortMergeJoin",), 1),
+    "shipping_priority": (("BroadcastHashJoin", "TakeOrderedAndProject"),
+                          ("SortMergeJoin",), 1),
+    "big_orders": (("BroadcastHashJoin", "TakeOrderedAndProject"),
+                   ("SortMergeJoin",), 1),
+    "tpch_q1": (("partial_sum",), ("Join",), 1),
+    "value_percentiles": (("percentile",), (), 1),
+    # dedup: the signature or assignment stage runs once (a persisted
+    # table or a checkpoint), and pairs come from equi-joins, never from
+    # collect_set bucket arrays
+    "dedup_minhash_lsh": (("MapInPandas", "InMemoryTableScan"),
+                          ("collect_set",), 1),
+    "semantic_dedup": (("Scan ExistingRDD",),
+                       NO_PYTHON + ("CartesianProduct",), 2),
+    "dedup_weights": (("SortMergeJoin", "partial_count"), (), 4),
+    "line_dedup": (("Union",), NO_PYTHON, 2),
+    "doc_line_dedup": (("row_number", "collect_list"), NO_PYTHON, 2),
+    "doc_repetition": ((), NO_PYTHON, 2),
+    # n-gram LMs: model tables and the 1-row total broadcast
+    "bigram_logprob": (("BroadcastHashJoin", "BroadcastNestedLoopJoin"),
+                       ("SortMergeJoin",), 6),
+    "perplexity_buckets": (("ntile", "BroadcastNestedLoopJoin"),
+                           ("SortMergeJoin",), 7),
+    # the one keyed shuffle is the map-side-combined report aggregation
+    "weighted_sample": ((), ("Join",), 1),
+    "length_buckets": (("partial_count",), ("Join",), 1),
+    # scan-stage projections: no keyed shuffle, no Python, no join
+    "gopher_rules": ((), NO_PYTHON + ("Join",), 0),
+    "url_normalize": ((), NO_PYTHON + ("Join",), 0),
+    "webhook_payloads": (("StructsToJson", "md5"), NO_PYTHON + ("Join",), 0),
+    "page_metadata": ((), NO_PYTHON + ("Join",), 0),
+    "lang_audit": ((), NO_PYTHON + ("Join",), 0),
+    "charset_audit": ((), NO_PYTHON + ("Join",), 0),
+    "sitemap_urls": (("StringEndsWith(url,/sitemap.xml)",),
+                     NO_PYTHON + ("Join",), 0),
+    "cdx_index": (("rangepartitioning(surt_key",), NO_PYTHON, 0),
+    # one keyed shuffle serves the windows and the groupBy on that key
+    "sessionize": (("Window",), (), 1),
+    "host_cap_sample": (("row_number", "md5"), (), 1),
+    "ann_ivf": (("BroadcastHashJoin",), NO_PYTHON, 1),
+    "asof_join": (("Window", "partial_max_by"),
+                  ("BroadcastNestedLoopJoin", "CartesianProduct"), 2),
+    # sketches: map-side partial aggregates, tiny sides broadcast
+    "kmv_distinct": (("TakeOrderedAndProject",), (), 2),
+    "cms_topk": (("BroadcastHashJoin", "TakeOrderedAndProject",
+                  "partial_count"), (), 3),
+    "bloom_filter": (("BroadcastHashJoin", "partial_bit_or"),
+                     ("SortMergeJoin",), 3),
+    "histogram_quantiles": (("partial_count",), ("percentile",), 4),
+    # link graph and crawl control
+    "host_linkgraph": (("partial_count",), NO_PYTHON, 2),
+    "anchor_stats": (("partial_count",), NO_PYTHON, 1),
+    "link_pagerank": (("Scan ExistingRDD",),
+                      ("CartesianProduct", "BroadcastNestedLoopJoin"), 1),
+    "frontier_priority": (("BroadcastNestedLoopJoin",
+                           "BroadcastHashJoin LeftOuter"), (), 2),
+    "frontier_discovery": (("BroadcastHashJoin LeftAnti",), (), 2),
+    "robots_precedence": (("BroadcastHashJoin", "SortMergeJoin"), (), 3),
+    "canonical_clusters": (("partial_min",), ("Join",), 2),
+    "host_quality": (("partial_sum",), ("Join",), 1),
+    "template_detect": (("partial_count", "md5"), ("Join",), 1),
+    "crawl_budget": (("TakeOrderedAndProject",), ("Window",), 4),
+    "sitemap_freshness": (("BroadcastHashJoin",), ("SortMergeJoin",), 0),
+}
+
+
+@pytest.mark.parametrize("name", sorted(PLAN_SHAPES))
+def test_plan_shape(spark, name):
+    import __spark_entry__ as entrymod
+    must, must_not, n_hash = PLAN_SHAPES[name]
+    plan = plan_of(entrymod.queries()[name](spark, SF))
+    got = ([f for f in must if f not in plan],
+           [f for f in must_not if f in plan], n_hash_exchanges(plan))
+    assert got == ([], [], n_hash), plan
 
 
 def test_metadata_scan_prunes_html_and_pushes_filter(spark):
@@ -41,9 +126,9 @@ def test_metadata_scan_prunes_html_and_pushes_filter(spark):
     plan = plan_of(q)
     scan = plan[plan.index("Scan parquet"):]
     read_schema = scan.split("ReadSchema:")[1].splitlines()[0]
-    assert "html" not in read_schema, "binary payload must be pruned"
+    assert "html" not in read_schema, f"binary payload must be pruned\n{plan}"
     pushed = scan.split("PushedFilters:")[1].splitlines()[0]
-    assert "lang" in pushed, "lang predicate must reach the parquet scan"
+    assert "lang" in pushed, f"lang predicate must reach the scan\n{plan}"
 
 
 def test_extract_pipeline_has_single_exchange_before_arrow(spark):
@@ -51,21 +136,24 @@ def test_extract_pipeline_has_single_exchange_before_arrow(spark):
     pages = spark.read.parquet(PAGES_SMOKE)
     results, _ = extract_pipeline(pages, num_partitions=8, shuffle_partitions=8)
     plan = plan_of(results)
-    assert n_exchanges(plan) == 1, "exactly one salted repartition"
-    assert "MapInArrow" in plan or "ArrowEvalPython" in plan or "PythonMapInArrow" in plan
+    assert n_exchanges(plan) == 1, f"exactly one salted repartition\n{plan}"
+    assert "MapInArrow" in plan, plan
+    # the JVM gates filter rows before the shuffle, so rejects never move
+    tree = plan.split("\n\n")[0]
+    assert tree.index("Filter") > tree.index("Exchange"), plan
 
 
 def test_point_lookup_broadcasts(spark):
     import __spark_entry__ as entrymod
     plan = plan_of(entrymod.queries()["point_lookup"](spark, SF))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    assert "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
 
 
 def test_jobs_listing_is_topk_not_total_sort(spark):
     import __spark_entry__ as entrymod
     plan = plan_of(entrymod.queries()["jobs_listing"](spark, SF))
-    assert "TakeOrderedAndProject" in plan, "top-k must not be a total sort"
+    assert "TakeOrderedAndProject" in plan, f"top-k, not a total sort\n{plan}"
 
 
 def test_expression_layer_is_pure_catalyst(spark):
@@ -75,21 +163,22 @@ def test_expression_layer_is_pure_catalyst(spark):
     plan = plan_of(entrymod.queries()["plain_text_format"](spark, SF))
     for node in ("BatchEvalPython", "ArrowEvalPython", "MapInArrow",
                  "MapInPandas"):
-        assert node not in plan, "F-layer must be pure Catalyst"
+        assert node not in plan, f"F-layer must be pure Catalyst\n{plan}"
     assert "regexp_replace" in plan.split("(2) Project")[1], \
-        "regex chain expected inside the Project node"
+        f"regex chain expected inside the Project node\n{plan}"
 
 
 def test_resume_antijoin_plan_shape(spark):
     import __spark_entry__ as entrymod
     plan = plan_of(entrymod.queries()["resume_antijoin"](spark, SF))
-    assert "LeftAnti" in plan
+    assert "LeftAnti" in plan, plan
 
 
 def test_rollup_uses_expand(spark):
     import __spark_entry__ as entrymod
     plan = plan_of(entrymod.queries()["rollup_stats"](spark, SF))
-    assert "Expand" in plan
+    assert "Expand" in plan, plan
+    assert n_hash_exchanges(plan) == 1, plan  # one shuffle for all sets
 
 
 def test_bucketed_join_and_agg_have_zero_exchange(spark, tmp_path):
@@ -114,7 +203,7 @@ def test_bucketed_join_and_agg_have_zero_exchange(spark, tmp_path):
         joined = bdocs.join(bembs, bdocs.doc_id == bembs.vec_id) \
             .select("doc_id", "lang", "label")
         plan = plan_of(joined)
-        assert "SortMergeJoin" in plan
+        assert "SortMergeJoin" in plan, plan
         assert n_exchanges(plan) == 0, plan
         assert joined.count() == 400
 
@@ -135,8 +224,8 @@ def test_corpus_curation_single_pass_no_join(spark):
     (the mix-report agg and its orderBy shuffle ≤ |langs|² rows)."""
     import __spark_entry__ as entrymod
     plan = plan_of(entrymod.queries()["corpus_curation"](spark, SF))
-    assert "Join" not in plan, "signals must ride the struct-min, not a join"
-    assert "PythonUDF" not in plan and "mapInPandas" not in plan.lower()
+    assert "Join" not in plan, f"signals ride the struct-min, no join\n{plan}"
+    assert "PythonUDF" not in plan and "mapInPandas" not in plan.lower(), plan
     # widen() round-robin + digest groupBy + final agg + orderBy range
     assert n_exchanges(plan) <= 4, plan
 
@@ -146,18 +235,21 @@ def test_pii_redact_is_pure_catalyst(spark):
     codegen stage, no Python, no shuffle beyond widen + output sort."""
     import __spark_entry__ as entrymod
     plan = plan_of(entrymod.queries()["pii_redact"](spark, SF))
-    assert "Python" not in plan and "Arrow" not in plan
+    assert "Python" not in plan and "Arrow" not in plan, plan
     assert n_exchanges(plan) <= 2, plan  # widen round-robin + orderBy range
 
 
 def test_decontaminate_broadcasts_benchmark_set(spark):
     """The eval-suite n-gram table is small by nature — the corpus-side
     13-gram stream must probe a BROADCAST of it, never shuffle against it,
-    and nothing may plan as a cartesian product."""
+    and nothing may plan as a cartesian product. The two keyed shuffles
+    are the eval set's n-gram distinct and the hits' re-aggregation on
+    doc_id."""
     import __spark_entry__ as entrymod
     plan = plan_of(entrymod.queries()["decontaminate"](spark, SF))
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
+    assert "BroadcastHashJoin" in plan, plan
+    assert "CartesianProduct" not in plan, plan
+    assert n_hash_exchanges(plan) == 2, plan
 
 
 def test_token_pack_has_no_single_partition_window(spark):
@@ -168,7 +260,7 @@ def test_token_pack_has_no_single_partition_window(spark):
     import __spark_entry__ as entrymod
     plan = plan_of(entrymod.queries()["token_pack"](spark, SF))
     assert "SinglePartition" not in plan, plan
-    assert "Window" in plan and "BroadcastHashJoin" in plan
+    assert "Window" in plan and "BroadcastHashJoin" in plan, plan
 
 
 def test_unicode_normalize_single_arrow_stage(spark):
@@ -178,17 +270,20 @@ def test_unicode_normalize_single_arrow_stage(spark):
     import __spark_entry__ as entrymod
     plan = plan_of(entrymod.queries()["unicode_normalize"](spark, SF))
     assert len(set(plan_re.findall(plan))) == 1, plan
-    assert "BatchEvalPython" not in plan
+    assert "BatchEvalPython" not in plan, plan
 
 
 def test_unigram_logprob_broadcasts_vocab_and_total(spark):
     """Vocab and the 1-row corpus total must both arrive by broadcast;
-    the only data-sized shuffles are the three keyed aggregations."""
+    the only data-sized shuffles are the three keyed aggregations, the
+    vocab one planned twice (under the vocab and the total broadcasts)."""
     import __spark_entry__ as entrymod
     plan = plan_of(entrymod.queries()["unigram_logprob"](spark, SF))
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
+    assert "BroadcastHashJoin" in plan, plan
+    assert "BroadcastNestedLoopJoin" in plan, plan
+    assert "CartesianProduct" not in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert n_hash_exchanges(plan) == 4, plan
 
 
 def test_snapshot_diff_shuffles_digests_not_text(spark):
@@ -221,9 +316,9 @@ def test_mix_sample_broadcasts_stratum_thresholds(spark):
     column; no SortMergeJoin, no Python."""
     import __spark_entry__ as entrymod
     plan = plan_of(entrymod.queries()["mix_sample"](spark, SF))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "Python" not in plan and "Arrow" not in plan
+    assert "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "Python" not in plan and "Arrow" not in plan, plan
 
 
 def test_blocklist_filter_is_broadcast_anti_join(spark):
@@ -234,8 +329,9 @@ def test_blocklist_filter_is_broadcast_anti_join(spark):
     plan = plan_of(entrymod.queries()["blocklist_filter"](spark, SF))
     m = re.search(r"BroadcastHashJoin[^\n]*LeftAnti", plan)
     assert m, plan
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "CartesianProduct" not in plan, plan
+    assert n_hash_exchanges(plan) == 1, plan  # the report aggregation
 
 
 def test_source_terms_broadcasts_vocab_sides(spark):
@@ -244,10 +340,11 @@ def test_source_terms_broadcasts_vocab_sides(spark):
     Exchange SinglePartition); tokens stay JVM-side."""
     import __spark_entry__ as entrymod
     plan = plan_of(entrymod.queries()["source_terms"](spark, SF))
-    assert "BroadcastHashJoin" in plan
-    assert "SinglePartition" not in plan or "BroadcastNestedLoopJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "Python" not in plan
+    assert "BroadcastHashJoin" in plan, plan
+    assert ("SinglePartition" not in plan
+            or "BroadcastNestedLoopJoin" in plan), plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "Python" not in plan, plan
 
 
 def test_bm25_no_explode_and_topk(spark):
@@ -268,7 +365,7 @@ def test_bm25_no_explode_and_topk(spark):
     assert "hashpartitioning" not in plan, plan
     assert "rangepartitioning" not in plan, plan
     assert plan.count("SinglePartition") >= 1, plan
-    assert "Python" not in plan and "Arrow" not in plan
+    assert "Python" not in plan and "Arrow" not in plan, plan
 
 
 def test_quality_classifier_is_shuffle_free_scoring(spark):
@@ -281,7 +378,7 @@ def test_quality_classifier_is_shuffle_free_scoring(spark):
     assert "Join" not in plan, plan
     assert "HashAggregate" not in plan and "SortAggregate" not in plan, plan
     assert "hashpartitioning" not in plan, plan  # only the ORDER BY range
-    assert "Python" not in plan and "Arrow" not in plan
+    assert "Python" not in plan and "Arrow" not in plan, plan
 
 
 def test_mojibake_repair_is_pure_catalyst(spark):
@@ -289,7 +386,7 @@ def test_mojibake_repair_is_pure_catalyst(spark):
     the only Exchange is the output ORDER BY."""
     import __spark_entry__ as entrymod
     plan = plan_of(entrymod.queries()["mojibake_repair"](spark, SF))
-    assert "Python" not in plan and "Arrow" not in plan
+    assert "Python" not in plan and "Arrow" not in plan, plan
     assert "Join" not in plan, plan
     assert "hashpartitioning" not in plan, plan  # only the ORDER BY range
 
@@ -302,8 +399,8 @@ def test_split_assign_broadcasts_split_sizes(spark):
     import __spark_entry__ as entrymod
     plan = plan_of(entrymod.queries()["split_assign"](spark, SF))
     assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan
-    assert "Python" not in plan and "Arrow" not in plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "Python" not in plan and "Arrow" not in plan, plan
 
 
 def test_domain_pagerank_round_is_join_plus_partial_agg(spark):
@@ -313,8 +410,8 @@ def test_domain_pagerank_round_is_join_plus_partial_agg(spark):
     ahead of the groupBy(dst) shuffle and no nested-loop joins."""
     import __spark_entry__ as entrymod
     plan = plan_of(entrymod.queries()["domain_pagerank"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "Scan ExistingRDD" in plan, plan  # checkpointed ranks, not lineage
     assert plan.count("Join") < 8, plan      # one round, not five stacked
 
@@ -328,8 +425,8 @@ def test_politeness_audit_single_keyed_shuffle(spark):
     import __spark_entry__ as entrymod
     plan = plan_of(entrymod.queries()["politeness_audit"](spark, SF))
     assert plan.count("hashpartitioning(host") <= 2, plan  # 1 node + detail
-    assert len(re.findall(r"Arguments: hashpartitioning", plan)) == 1, plan
-    assert "Python" not in plan and "Arrow" not in plan
+    assert n_hash_exchanges(plan) == 1, plan
+    assert "Python" not in plan and "Arrow" not in plan, plan
 
 
 def test_incremental_dedup_bloom_broadcasts_and_exact_join_is_filtered(spark):
@@ -343,7 +440,7 @@ def test_incremental_dedup_bloom_broadcasts_and_exact_join_is_filtered(spark):
     assert "BroadcastHashJoin" in plan, plan
     assert "LeftSemi" in plan, plan
     assert "is_candidate" in plan, plan
-    assert "CartesianProduct" not in plan
+    assert "CartesianProduct" not in plan, plan
 
 
 def test_range_join_variable_is_equi_join(spark):
@@ -405,7 +502,7 @@ def test_bpe_pair_stats_topk_and_vocab_shuffle(spark):
     import __spark_entry__ as entrymod
     plan = plan_of(entrymod.queries()["bpe_pair_stats"](spark, SF))
     assert "TakeOrderedAndProject" in plan, plan
-    assert "Python" not in plan and "Arrow" not in plan
+    assert "Python" not in plan and "Arrow" not in plan, plan
 
 
 def test_token_entropy_two_keyed_shuffles_max(spark):
@@ -414,8 +511,8 @@ def test_token_entropy_two_keyed_shuffles_max(spark):
     Exchanges appear; zero Python."""
     import __spark_entry__ as entrymod
     plan = plan_of(entrymod.queries()["token_entropy"](spark, SF))
-    assert len(re.findall(r"Arguments: hashpartitioning", plan)) <= 2, plan
-    assert "Python" not in plan and "Arrow" not in plan
+    assert n_hash_exchanges(plan) <= 2, plan
+    assert "Python" not in plan and "Arrow" not in plan, plan
 
 
 def test_chunk_overlap_is_pure_catalyst(spark):
@@ -423,7 +520,7 @@ def test_chunk_overlap_is_pure_catalyst(spark):
     no Python anywhere, no join."""
     import __spark_entry__ as entrymod
     plan = plan_of(entrymod.queries()["chunk_overlap"](spark, SF))
-    assert "Python" not in plan and "Arrow" not in plan
+    assert "Python" not in plan and "Arrow" not in plan, plan
     assert "Join" not in plan, plan
 
 
@@ -437,8 +534,7 @@ def test_cdx_shards_has_no_unpartitioned_window(spark):
     import __spark_entry__ as entrymod
     plan = plan_of(entrymod.queries()["cdx_shards"](spark, SF))
     specs = re.findall(r"windowspecdefinition\(([^)]*)", plan)
-    assert specs, "expected at least one window (the per-group cumsum)"
+    assert specs, f"expected at least one window (the per-group cumsum)\n{plan}"
     for spec in specs:
         first = spec.split(",")[0]
-        assert " ASC" not in first and " DESC" not in first, (
-            f"unpartitioned window spec: windowspecdefinition({spec[:120]}")
+        assert " ASC" not in first and " DESC" not in first, plan
